@@ -67,7 +67,7 @@ object IvfServingBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val last = sfDir.split('/').last
-    val wh = "/tmp/graft_warehouse"
+    val wh = graft.engine.PublishGuard.ArtifactWarehouse
     val edges = Graph.sharedTradeEdges(
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir),
       cacheKey = sfDir)

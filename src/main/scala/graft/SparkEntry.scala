@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{PublishGuard, Tables}
+import graft.engine.PublishGuard.ArtifactWarehouse
 import graft.operators.{AsOfJoin, Bpe, Curation, Dedup, EventPipelines, FunctionSurface, Graph, Incremental, Multimodal, Quality, Relational, Sequence, Similarity, SqlSurface, TextAnalysis, TimeSeries}
 import graft.functions.OracleRound
 
@@ -652,7 +653,7 @@ object SparkEntry {
     // values bit-exact (fold dots vs table literals, 6 dp), summary 4 dp
     "sim_silhouette" -> ((s, d) =>
       Similarity.silhouettePublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("cluster")),
     // index promotion gate: recall@5 of the published-IVF search vs the
@@ -660,7 +661,7 @@ object SparkEntry {
     // intersection count and the single-division recall are exact
     "sim_recall_eval" -> ((s, d) =>
       Similarity.recallEvalPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("query_id")),
     // Matryoshka truncation eval: recall@5 of the exact search run on
@@ -677,7 +678,7 @@ object SparkEntry {
     "sim_cluster_terms" -> ((s, d) =>
       Similarity.clusterTermsPublished(
         Tables.embeddings(s, d), Tables.documents(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("cluster", "rank")),
     // hybrid search: embedding top-20 + lexical rarity-weighted-overlap
@@ -736,7 +737,7 @@ object SparkEntry {
     // but serving against fixed centroids is
     "sim_ivf_topk" -> ((s, d) =>
       Similarity.ivfTopKPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("query_id", "rank")),
     // two-level probe selection on the Similarity ANN surface (round 17;
@@ -745,7 +746,7 @@ object SparkEntry {
     // quantizer — probes restricted to the top-2 of 4 groups' members
     "sim_ivf_hier_topk" -> ((s, d) =>
       Similarity.ivfTopKPublishedHier(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("query_id", "rank")),
     // binary sign-quantization ANN (round 17): 63-bit sign codes +
@@ -760,7 +761,7 @@ object SparkEntry {
     // probe and rerank math, query set swapped
     "sim_ivf_external_topk" -> ((s, d) =>
       Similarity.ivfTopKPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}",
         queryTable = Some(Tables.embeddings(s, d)
           .where(col("vec_id") % 97 === 1).select("vec_id", "embedding")))
@@ -770,7 +771,7 @@ object SparkEntry {
     // group — the pair former is cluster-bucketed, never corpus²
     "sim_semantic_prune" -> ((s, d) =>
       Similarity.semanticPrunePublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("vec_id")),
     // the retrain trigger: PSI of the cluster-assignment distribution
@@ -779,21 +780,21 @@ object SparkEntry {
     // PSI itself constant-size (quantifies when rotateIvfIndex is due)
     "sim_centroid_drift" -> ((s, d) =>
       Similarity.centroidDriftPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")),
     // PQ/ADC compressed-index scan with exact rerank — same split: the
     // trained codebooks are published and the oracle replays code
     // assignment + the ADC sum + rerank from the published table
     "sim_pq_topk" -> ((s, d) =>
       Similarity.pqTopKPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"pq_codebooks_${d.split('/').last}")
         .orderBy("query_id", "rank")),
     // IVF coarse pruning × PQ compressed scan — the production ANN
     // pairing; publishes both artifacts, oracle replays the full chain
     "sim_ivfpq_topk" -> ((s, d) =>
       Similarity.ivfPqTopKPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivfpq_${d.split('/').last}")
         .orderBy("query_id", "rank")),
     // PCA train/serve split: covariance folds distributed, the (dim×dim)
@@ -802,7 +803,7 @@ object SparkEntry {
     // sequential folds the oracle replays bit-for-bit
     "sim_pca_project" -> ((s, d) =>
       Similarity.pcaProjectPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"pca_${d.split('/').last}")
         .orderBy("vec_id")),
     // PCA whitening: the published projection scaled per component by
@@ -810,7 +811,7 @@ object SparkEntry {
     // artifacts as literals, every output replayable from the tables
     "sim_whiten" -> ((s, d) =>
       Similarity.whitenPublished(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         pcaSlug = s"pca_${d.split('/').last}",
         slug = s"whiten_${d.split('/').last}")
         .orderBy("vec_id")),
@@ -1062,7 +1063,7 @@ object SparkEntry {
     // no transcendental in the scored output, so the oracle is exact
     "pipeline_quality_classifier" -> ((s, d) =>
       Curation.qualityClassifierScores(Tables.documents(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"clf_weights_${d.split('/').last}")
         .orderBy("doc_id")),
     // reliability report: margin deciles (exact distributed ntile) vs
@@ -1070,14 +1071,14 @@ object SparkEntry {
     // calibration for the published classifier
     "pipeline_classifier_calibration" -> ((s, d) =>
       Curation.classifierCalibration(Tables.documents(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"clf_weights_${d.split('/').last}")
         .orderBy("bin")),
     // the promotion gate: confusion matrix + accuracy of the published
     // classifier against its reference labels, one partial aggregate
     "pipeline_classifier_eval" -> ((s, d) =>
       Curation.qualityClassifierEval(Tables.documents(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"clf_weights_${d.split('/').last}")),
     // DSIR hashed-bigram importance weights: per-doc log p_target/p_raw
     // under Laplace-smoothed 64-bucket models (target = the corpus's own
@@ -1211,7 +1212,7 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.embeddingNeighbors(emb,
         Tables.orders(s, d).where(col("o_custkey") < 10)
@@ -1226,7 +1227,7 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.linkPrediction(emb, edges,
         Tables.orders(s, d).where(col("o_custkey") < 10)
@@ -1243,12 +1244,12 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.linkPredictionIvf(emb, edges,
         Tables.orders(s, d).where(col("o_custkey") < 10)
           .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct(),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_ivf_${d.split('/').last}")
         .orderBy("query", "rank")
     }),
@@ -1261,12 +1262,12 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.embeddingNeighborsIvfPruned(emb,
         Tables.orders(s, d).where(col("o_custkey") < 10)
           .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct(),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_ivf_${d.split('/').last}")
         .orderBy("query", "rank")
     }),
@@ -1275,12 +1276,12 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.linkPredictionIvfPruned(emb, edges,
         Tables.orders(s, d).where(col("o_custkey") < 10)
           .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct(),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_ivf_${d.split('/').last}")
         .orderBy("query", "rank")
     }),
@@ -1293,12 +1294,12 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.embeddingNeighborsIvfPruned(emb,
         Tables.orders(s, d).where(col("o_custkey") < 10)
           .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct(),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_ivf_${d.split('/').last}",
         gprobe = 2)
         .orderBy("query", "rank")
@@ -1313,7 +1314,7 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedNode2vecCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_n2v_${d.split('/').last}")
       Graph.embeddingNeighbors(emb,
         Tables.orders(s, d).where(col("o_custkey") < 10)
@@ -1330,12 +1331,12 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       val emb = Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}")
       Graph.embeddingNeighborsIvf(emb,
         Tables.orders(s, d).where(col("o_custkey") < 10)
           .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct(),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_ivf_${d.split('/').last}")
         .orderBy("query", "rank")
     }),
@@ -1348,7 +1349,7 @@ object SparkEntry {
         Tables.orders(s, d), Tables.lineitem(s, d), cacheKey = d)
       Graph.embeddingEval(Graph.publishedNodeEmbeddings(
         Graph.sharedWalkCorpus(edges, cacheKey = d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"node_emb_${d.split('/').last}"))
     }),
     // walk-corpus QA: per step, surviving walks and distinct-node
@@ -1429,7 +1430,7 @@ object SparkEntry {
     // sort across nlist reducers
     "pipeline_diverse_sample" -> ((s, d) =>
       Similarity.diverseSample(Tables.embeddings(s, d),
-        baseDir = "/tmp/graft_warehouse",
+        baseDir = ArtifactWarehouse,
         slug = s"ivf_centroids_${d.split('/').last}")
         .orderBy("cluster", "rank")),
     // connected components of the support-2 co-purchase graph by
@@ -1536,17 +1537,17 @@ object SparkEntry {
     // shuffle, then a vocab-sized 24-round argmax loop; published via
     // PublishGuard. The oracle RE-DERIVES training round by round.
     "text_bpe_merges" -> ((s, d) =>
-      Bpe.mergeTable(Tables.documents(s, d), "/tmp/graft_warehouse",
+      Bpe.mergeTable(Tables.documents(s, d), ArtifactWarehouse,
         s"bpe_${d.split('/').last}").orderBy("rank")),
     // serving: the merge chain runs once per DISTINCT word (codegen'd
     // literal replaces), then rejoins the (doc, word) stream
     "text_bpe_tokenize" -> ((s, d) =>
-      Bpe.tokenizeStats(Tables.documents(s, d), "/tmp/graft_warehouse",
+      Bpe.tokenizeStats(Tables.documents(s, d), ArtifactWarehouse,
         s"bpe_${d.split('/').last}").orderBy("doc_id")),
     // top-20 words with their learned segmentations (pins the actual
     // subword strings, not just counts)
     "text_bpe_segments" -> ((s, d) =>
-      Bpe.topSegmentations(Tables.documents(s, d), "/tmp/graft_warehouse",
+      Bpe.topSegmentations(Tables.documents(s, d), ArtifactWarehouse,
         s"bpe_${d.split('/').last}")),
     // ── time series: resample / gap-fill / rolling / decay ─────────────
     // calendar spine + LOCF/NOCB/linear interpolation in one window pair
@@ -3538,7 +3539,7 @@ object SparkEntry {
     // per-vector s rounded 6 dp BEFORE the per-cluster summary
     "sim_silhouette" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -3574,7 +3575,7 @@ object SparkEntry {
     // recall = one IEEE division
     "sim_recall_eval" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS MATERIALIZED (
         |  SELECT vec_id, v,
@@ -3681,7 +3682,7 @@ object SparkEntry {
     // 6 dp BEFORE the per-cluster rank cut
     "sim_cluster_terms" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -3983,7 +3984,7 @@ object SparkEntry {
     "sim_semantic_prune" ->
       s"""WITH RECURSIVE
         |c AS (SELECT list_id, centroid
-        |      FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |      FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4032,7 +4033,7 @@ object SparkEntry {
     // Spark aggregate's zero init, 4 dp)
     "sim_centroid_drift" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4081,7 +4082,7 @@ object SparkEntry {
     // top-nprobe probe lists, exact-cosine rerank.
     "sim_ivf_topk" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4125,9 +4126,9 @@ object SparkEntry {
     // id), each query's top-2 groups, probes restricted to their members
     "sim_ivf_hier_topk" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |g AS (SELECT group_id, centroid
-        |      FROM read_parquet('${Similarity.ivfGroupsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf, 16, 3, 4, 3)}/*.parquet')),
+        |      FROM read_parquet('${Similarity.ivfGroupsPath(ArtifactWarehouse, "ivf_centroids_" + sf, 16, 3, 4, 3)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4191,7 +4192,7 @@ object SparkEntry {
     // external query table — the artifact and all serving math unchanged
     "sim_ivf_external_topk" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4262,7 +4263,7 @@ object SparkEntry {
     // query subset (vec_id % 89 = 2)
     "sql_graft_ivf_search" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "sqlivf_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "sqlivf_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4311,7 +4312,7 @@ object SparkEntry {
       s"""WITH b AS (SELECT s, j, centroid,
         |                  list_reduce([x * x for x in centroid],
         |                              (x, y) -> x + y) / 2 AS bias
-        |           FROM read_parquet('${Similarity.pqCodebooksPath("/tmp/graft_warehouse", "pq_codebooks_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.pqCodebooksPath(ArtifactWarehouse, "pq_codebooks_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -4360,11 +4361,11 @@ object SparkEntry {
     // exact rerank exactly as sim_pq_topk.
     "sim_ivfpq_topk" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivfpq_" + sf + "_centroids")}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivfpq_" + sf + "_centroids")}/*.parquet')),
         |b AS (SELECT s, j, centroid,
         |             list_reduce([x * x for x in centroid],
         |                         (x, y) -> x + y) / 2 AS bias
-        |      FROM read_parquet('${Similarity.pqCodebooksPath("/tmp/graft_warehouse", "ivfpq_" + sf + "_codebooks")}/*.parquet')),
+        |      FROM read_parquet('${Similarity.pqCodebooksPath(ArtifactWarehouse, "ivfpq_" + sf + "_codebooks")}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -5418,7 +5419,7 @@ object SparkEntry {
       }.mkString(",\n")
       val sumsq = (1 to 16).map(k => f"p$k%02d * p$k%02d").mkString(" + ")
       s"""WITH p AS (SELECT component, mean, rot
-         |           FROM read_parquet('${Similarity.pcaPath("/tmp/graft_warehouse", "pca_" + sf)}/*.parquet')),
+         |           FROM read_parquet('${Similarity.pcaPath(ArtifactWarehouse, "pca_" + sf)}/*.parquet')),
          |pl AS (SELECT list(mean ORDER BY component) AS m,
          |              list(rot ORDER BY component) AS rm FROM p),
          |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -5441,11 +5442,11 @@ object SparkEntry {
         s"floor(p$kk * sl.s[$k] * 1000000 + 0.5) / 1000000 AS w$kk"
       }.mkString(",\n       ")
       s"""WITH p AS (SELECT component, mean, rot
-         |           FROM read_parquet('${Similarity.pcaPath("/tmp/graft_warehouse", "pca_" + sf)}/*.parquet')),
+         |           FROM read_parquet('${Similarity.pcaPath(ArtifactWarehouse, "pca_" + sf)}/*.parquet')),
          |pl AS (SELECT list(mean ORDER BY component) AS m,
          |              list(rot ORDER BY component) AS rm FROM p),
          |sc AS (SELECT component, scale
-         |       FROM read_parquet('${Similarity.whitenPath("/tmp/graft_warehouse", "whiten_" + sf)}/*.parquet')),
+         |       FROM read_parquet('${Similarity.whitenPath(ArtifactWarehouse, "whiten_" + sf)}/*.parquet')),
          |sl AS (SELECT list(scale ORDER BY component) AS s FROM sc),
          |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |y AS (SELECT vec_id,
@@ -5767,7 +5768,7 @@ object SparkEntry {
     // and reproduces every fold cosine bit-for-bit
     "graph_embedding_neighbors" ->
       s"""WITH emb AS (SELECT node, vec::DOUBLE[] AS v
-        |             FROM read_parquet('${Graph.nodeEmbeddingPath("/tmp/graft_warehouse", "node_emb_" + sf)}/*.parquet')),
+        |             FROM read_parquet('${Graph.nodeEmbeddingPath(ArtifactWarehouse, "node_emb_" + sf)}/*.parquet')),
         |n AS (SELECT node, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
         |      FROM emb),
@@ -5790,7 +5791,7 @@ object SparkEntry {
     // published-table replay, same fold cosine and rank rule
     "graph_link_prediction" ->
       s"""WITH emb AS (SELECT node, vec::DOUBLE[] AS v
-        |             FROM read_parquet('${Graph.nodeEmbeddingPath("/tmp/graft_warehouse", "node_emb_" + sf)}/*.parquet')),
+        |             FROM read_parquet('${Graph.nodeEmbeddingPath(ArtifactWarehouse, "node_emb_" + sf)}/*.parquet')),
         |n AS (SELECT node, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
         |      FROM emb),
@@ -5817,7 +5818,7 @@ object SparkEntry {
     // node2vec-trained published table — same chain, different slug
     "graph_embedding_neighbors_n2v" ->
       s"""WITH emb AS (SELECT node, vec::DOUBLE[] AS v
-        |             FROM read_parquet('${Graph.nodeEmbeddingPath("/tmp/graft_warehouse", "node_emb_n2v_" + sf)}/*.parquet')),
+        |             FROM read_parquet('${Graph.nodeEmbeddingPath(ArtifactWarehouse, "node_emb_n2v_" + sf)}/*.parquet')),
         |n AS (SELECT node, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
         |      FROM emb),
@@ -5909,7 +5910,7 @@ object SparkEntry {
       def r6(e: String) = graft.functions.OracleRound.duck(e, 6)
       def r4(e: String) = graft.functions.OracleRound.duck(e, 4)
       s"""WITH emb AS (SELECT node, vec::DOUBLE[] AS v
-        |             FROM read_parquet('${Graph.nodeEmbeddingPath("/tmp/graft_warehouse", "node_emb_" + sf)}/*.parquet')),
+        |             FROM read_parquet('${Graph.nodeEmbeddingPath(ArtifactWarehouse, "node_emb_" + sf)}/*.parquet')),
         |n AS (SELECT node, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
         |      FROM emb),
@@ -6702,7 +6703,7 @@ object SparkEntry {
           s"(SELECT '|' || merged || '|' FROM m WHERE rank = $r))"
       }
       s"""WITH m AS (SELECT rank, lhs, rhs, merged
-         |           FROM read_parquet('${Bpe.mergesPath("/tmp/graft_warehouse", "bpe_" + sf)}/*.parquet')),
+         |           FROM read_parquet('${Bpe.mergesPath(ArtifactWarehouse, "bpe_" + sf)}/*.parquet')),
          |t AS (SELECT doc_id, $duckToks AS toks FROM documents),
          |w AS (SELECT doc_id, unnest(toks) AS word FROM t),
          |ww AS (SELECT doc_id, word FROM w WHERE word <> ''),
@@ -6723,7 +6724,7 @@ object SparkEntry {
           s"(SELECT '|' || merged || '|' FROM m WHERE rank = $r))"
       }
       s"""WITH m AS (SELECT rank, lhs, rhs, merged
-         |           FROM read_parquet('${Bpe.mergesPath("/tmp/graft_warehouse", "bpe_" + sf)}/*.parquet')),
+         |           FROM read_parquet('${Bpe.mergesPath(ArtifactWarehouse, "bpe_" + sf)}/*.parquet')),
          |t AS (SELECT doc_id, $duckToks AS toks FROM documents),
          |w AS (SELECT doc_id, unnest(toks) AS word FROM t),
          |ww AS (SELECT doc_id, word FROM w WHERE word <> ''),
@@ -6739,7 +6740,7 @@ object SparkEntry {
     // fixed-width string key + (key, vec_id) rank order per cluster
     "pipeline_diverse_sample" ->
       s"""WITH c AS (SELECT list_id, centroid
-        |           FROM read_parquet('${Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "ivf_centroids_" + sf)}/*.parquet')),
+        |           FROM read_parquet('${Similarity.ivfCentroidsPath(ArtifactWarehouse, "ivf_centroids_" + sf)}/*.parquet')),
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v,
         |             sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -7194,16 +7195,14 @@ object SparkEntry {
     * reads the compacted table, closing the operational loop under the
     * driver's oracle.
     */
-  private val compactedDocsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def compactedDocsDir(s: SparkSession, d: String): String =
-    compactedDocsCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("compacted_docs", d) {
       val frag = java.nio.file.Files.createTempDirectory("graft-frag").toString
       val dst = java.nio.file.Files.createTempDirectory("graft-compacted").toString
       Tables.documents(s, d).repartition(64).write.mode("overwrite").parquet(frag)
       graft.engine.Compaction.compactTo(s, frag, dst)
       dst
-    })
+    }
 
   /** Range-clustered lineitem rewrite (graft.engine.Layout), memoized per
     * sf dir like [[compactedDocsDir]]: 16 files tiling l_shipdate, so the
@@ -7211,44 +7210,39 @@ object SparkEntry {
     * READS THE CLUSTERED OUTPUT — a rewrite that lost or mangled rows
     * fails the DuckDB compare against the original table.
     */
-  private val clusteredLineitemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def clusteredLineitemDir(s: SparkSession, d: String): String =
-    clusteredLineitemCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("clustered_lineitem", d) {
       val dst = java.nio.file.Files.createTempDirectory("graft-clustered").toString
       graft.engine.Layout.clusteredWrite(
         Tables.lineitem(s, d), "l_shipdate", dst, nFiles = 16)
       dst
-    })
+    }
 
   /** Per-file min/max manifest over the clustered lineitem table
     * ([[clusteredLineitemDir]] — compute-once shared), memoized per sf
-    * dir: pipeline_manifest_scan plans its file list from this table.
+    * dir: pipeline_manifest_scan plans its file list from this table
+    * (a nested [[PublishGuard.once]] — builds run outside the map lock).
     */
-  private val manifestLineitemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def manifestLineitemDirs(s: SparkSession, d: String): (String, String) =
-    manifestLineitemCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("lineitem_manifest", d) {
       val table = clusteredLineitemDir(s, d)
       val mdir = java.nio.file.Files.createTempDirectory("graft-manifest").toString
       graft.engine.Layout.buildManifest(s, table, "l_shipdate", mdir)
       (table, mdir)
-    })
+    }
 
   /** Z-ordered lineitem rewrite (Layout.zorderWrite on l_shipdate ×
     * l_partkey), memoized per sf dir like the sibling layouts:
     * pipeline_zorder_scan's 2-D filter box prunes files in BOTH
     * dimensions on the Morton-clustered table.
     */
-  private val zorderedLineitemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def zorderedLineitemDir(s: SparkSession, d: String): String =
-    zorderedLineitemCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("zordered_lineitem", d) {
       val dst = java.nio.file.Files.createTempDirectory("graft-zorder").toString
       graft.engine.Layout.zorderWrite(
         Tables.lineitem(s, d), Seq("l_shipdate", "l_partkey"), dst, nFiles = 16)
       dst
-    })
+    }
 
   /** Two-generation (schema-evolved) documents split
     * (Layout.evolvedWrite), memoized per sf dir: v1 files predate the
@@ -7257,15 +7251,13 @@ object SparkEntry {
     * compare replays the deterministic parity split on the ORIGINAL
     * documents table.
     */
-  private val evolvedDocsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def evolvedDocsDirs(s: SparkSession, d: String): (String, String) =
-    evolvedDocsCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("evolved_docs", d) {
       val base = java.nio.file.Files.createTempDirectory("graft-evolved").toString
       graft.engine.Layout.evolvedWrite(
         Tables.documents(s, d), s"$base/v1", s"$base/v2")
       (s"$base/v1", s"$base/v2")
-    })
+    }
 
   /** Bucketed orders+lineitem catalog tables (Layout.bucketedWrite),
     * memoized per sf dir: both bucketed 8-ways on the order key, so
@@ -7274,10 +7266,8 @@ object SparkEntry {
     * against the ORIGINAL parquet catches a rewrite that lost rows).
     * Returns the two table names.
     */
-  private val bucketedTablesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedOrderTables(s: SparkSession, d: String): (String, String) =
-    bucketedTablesCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("bucketed_tables", d) {
       val slug = d.split('/').last.replace('.', '_').replace('-', '_')
       val (to, tl) = (s"graft_b_orders_$slug", s"graft_b_lineitem_$slug")
       graft.engine.Layout.bucketedWrite(
@@ -7285,7 +7275,7 @@ object SparkEntry {
       graft.engine.Layout.bucketedWrite(
         Tables.lineitem(s, d), tl, "l_orderkey", buckets = 8)
       (to, tl)
-    })
+    }
 
   /** The join pipeline_bucketed_join runs — exposed so LayoutSpec can
     * assert the exchange-free plan on the identical frame. The merge
@@ -7303,14 +7293,12 @@ object SparkEntry {
     * memoized per sf dir: pipeline_partitioned_scan's source filter prunes
     * at planning to one directory (LayoutSpec asserts the listing metric).
     */
-  private val partitionedDocsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedDocsDir(s: SparkSession, d: String): String =
-    partitionedDocsCache.computeIfAbsent(d, _ => {
+    PublishGuard.once("partitioned_docs", d) {
       val dst = java.nio.file.Files.createTempDirectory("graft-partitioned").toString
       graft.engine.Layout.partitionedWrite(Tables.documents(s, d), "source", dst)
       dst
-    })
+    }
 
   /** DuckDB expression for TextAnalysis.normalize / tokens (kept adjacent to
     * the Spark definitions so the two dialects stay in lock-step).
@@ -7352,10 +7340,10 @@ object SparkEntry {
         .stripMargin
     else ""
     s"""c AS (SELECT list_id, centroid
-      |           FROM read_parquet('${graft.operators.Similarity.ivfCentroidsPath("/tmp/graft_warehouse", "node_emb_ivf_" + sf)}/*.parquet')),
+      |           FROM read_parquet('${graft.operators.Similarity.ivfCentroidsPath(ArtifactWarehouse, "node_emb_ivf_" + sf)}/*.parquet')),
       |emb AS (SELECT node, vec::DOUBLE[] AS v
       |        FROM read_parquet('${graft.operators.Graph.nodeEmbeddingPath(
-                "/tmp/graft_warehouse", "node_emb_" + sf)}/*.parquet')),
+                ArtifactWarehouse, "node_emb_" + sf)}/*.parquet')),
       |n AS MATERIALIZED (
       |  SELECT node, v,
       |         sqrt(list_reduce([x * x for x in v], (x, y) -> x + y)) AS nrm
@@ -7409,7 +7397,7 @@ object SparkEntry {
       case Some((ngroups, giters, gprobe)) =>
         s"""g AS (SELECT group_id, centroid
           |       FROM read_parquet('${graft.operators.Similarity.ivfGroupsPath(
-                   "/tmp/graft_warehouse", "node_emb_ivf_" + sf, 16, 3,
+                   ArtifactWarehouse, "node_emb_ivf_" + sf, 16, 3,
                    ngroups, giters)}/*.parquet')),
           |cmap AS (SELECT list_id, group_id FROM (
           |           SELECT c.list_id, g.group_id,
@@ -7628,7 +7616,7 @@ object SparkEntry {
        |       CASE WHEN best > 0 AND s_en = best THEN 1 ELSE 0 END AS label
        |FROM (SELECT *, $bestExpr AS best FROM ls)),
        |wt AS (SELECT pos, w
-       |       FROM read_parquet('${Curation.classifierWeightsPath("/tmp/graft_warehouse", "clf_weights_" + sf)}/*.parquet')),
+       |       FROM read_parquet('${Curation.classifierWeightsPath(ArtifactWarehouse, "clf_weights_" + sf)}/*.parquet')),
        |tk AS (SELECT doc_id, unnest(toks) AS tk FROM t),
        |bc AS MATERIALIZED (
        |  SELECT doc_id,

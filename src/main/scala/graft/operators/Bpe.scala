@@ -111,9 +111,6 @@ object Bpe {
     } finally freeWords()
   }
 
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, Seq[Merge])]()
-
   private def docsFingerprint(docs: DataFrame): PublishGuard.Fingerprint =
     PublishGuard.fingerprint(docs, Seq(col("doc_id"), col("text")))
 
@@ -135,7 +132,7 @@ object Bpe {
     s"$baseDir/${slug}_m$numMerges"
 
   /** Read-through accessor for the published merge table — same
-    * materialized-view contract as [[Similarity.publishedArtifact]].
+    * materialized-view contract as [[PublishGuard.publishedArtifact]].
     * Table rows: (rank, lhs, rhs, merged, pair_count), rank 1..numMerges.
     */
   def publishedMerges(
@@ -145,15 +142,14 @@ object Bpe {
       numMerges: Int = 24): Seq[Merge] = {
     val spark = docs.sparkSession
     val path = mergesPath(baseDir, slug, numMerges)
-    Similarity.publishedArtifact[Seq[Merge]](
-      spark, path, s"bpe|$numMerges|$MinFreq",
-      docsFingerprint(docs), mergeCache,
+    PublishGuard.publishedArtifact[Seq[Merge]](
+      spark, path, docsFingerprint(docs), s"published BPE merges '$slug'",
       train = () => trainMerges(docs, numMerges),
       write = (m, p) => writeMergeTable(spark, m, p),
       load = () => spark.read.parquet(path).orderBy("rank").collect()
         .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(4))).toSeq,
-      what = s"published BPE merges '$slug'")
+      memoFamily = Some("bpe_merges"))
   }
 
   /** The published merge table as a DataFrame (the `text_bpe_merges`

@@ -67,13 +67,6 @@ object Curation {
         TextAnalysis.qualityOf(col("text"), col("toks")).as("quality"),
         size(col("toks")).as("n_tokens"))
 
-  private val enrichmentTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM enrichment-table memo. */
-  private[graft] def clearGateEnrichmentMemo(): Unit =
-    enrichmentTableCache.clear()
-
   /** [[gateEnrichment]] computed ONCE per cacheKey and PUBLISHED — the
     * [[Dedup.sharedNearDupClusters]] discipline applied to the gate
     * metrics. Two independent costs retire per consumer: the
@@ -97,10 +90,9 @@ object Curation {
     else {
       val fp = graft.engine.PublishGuard.fingerprint(
         docs, Seq(col("doc_id"), col("text")))
-      graft.engine.PublishGuard.sharedTable(
-        docs.sparkSession, enrichmentTableCache, baseDir,
-        "gate_enrichment", cacheKey, Nil, fp,
-        "gate enrichment table")(() => gateEnrichment(docs))
+      graft.engine.PublishGuard.sharedTableWithNotes(
+        docs.sparkSession, baseDir, "gate_enrichment", cacheKey, Nil, fp,
+        "gate enrichment table")(() => gateEnrichment(docs))._1
     }
 
   def curatedCorpusFromClusters(
@@ -1257,12 +1249,6 @@ object Curation {
             * buckets / col("n_grams")).as("x"))
   }
 
-  private val classifierCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.engine.PublishGuard.Fingerprint, Array[Double])]()
-
-  /** Test hook — drop the read-through weights memo (fresh-session sim). */
-  private[graft] def clearClassifierMemo(): Unit = classifierCache.clear()
-
   /** Full-batch gradient-descent logistic regression over the hashed
     * bigram features — the fastText-style quality/language classifier a
     * curation pipeline trains to score a raw crawl against a reference
@@ -1338,10 +1324,6 @@ object Curation {
     w
   }
 
-  /** Read-through accessor for the published classifier weights —
-    * the [[Similarity.publishedArtifact]] contract: train once, publish
-    * `(pos, w)` (bias at pos = buckets), serve everywhere.
-    */
   /** Canonical published path for classifier weights — every training
     * hyperparameter rides the path (round-15 params-in-path discipline).
     */
@@ -1351,6 +1333,10 @@ object Curation {
       miniBatches: Int = 4): String =
     s"$baseDir/${slug}_b${buckets}_${targetLang}_i${iters}_lr${lr}_mb$miniBatches"
 
+  /** Read-through accessor for the published classifier weights —
+    * the [[graft.engine.PublishGuard.publishedArtifact]] contract: train
+    * once, publish `(pos, w)` (bias at pos = buckets), serve everywhere.
+    */
   def publishedClassifierWeights(
       docs: DataFrame,
       baseDir: String,
@@ -1366,9 +1352,8 @@ object Curation {
     val fp = graft.engine.PublishGuard.fingerprint(
       docs, Seq(col("doc_id"), col("text"), col("lang")))
     val warmIters = math.max(1, iters / 2)
-    Similarity.publishedArtifact[Array[Double]](
-      spark, path, s"$buckets|$targetLang|$iters|$lr|$miniBatches",
-      fp, classifierCache,
+    graft.engine.PublishGuard.publishedArtifact[Array[Double]](
+      spark, path, fp, s"published classifier weights '$slug'",
       train = () =>
         trainQualityClassifier(
           docs, buckets, targetLang, iters, lr, miniBatches = miniBatches),
@@ -1379,7 +1364,6 @@ object Curation {
       },
       load = () => spark.read.parquet(path).orderBy("pos").collect()
         .map(_.getDouble(1)),
-      what = s"published classifier weights '$slug'",
       // data refresh under the same path: seed GD from the prior
       // published weights at half the iteration budget (round 16 —
       // the SGNS/k-means warm-refresh discipline; the sidecar records
@@ -1389,7 +1373,8 @@ object Curation {
         miniBatches = miniBatches, init = Some(prior))),
       notes = warmUsed => Map(
         "schedule" -> (if (warmUsed) "warm" else "cold"),
-        "iters_run" -> (if (warmUsed) warmIters else iters).toString))
+        "iters_run" -> (if (warmUsed) warmIters else iters).toString),
+      memoFamily = Some("classifier_weights"))
   }
 
   /** The classifier margin z = Σ_j x_j·w_j + bias as ONE map-only column

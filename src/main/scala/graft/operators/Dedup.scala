@@ -63,12 +63,6 @@ object Dedup {
         array_distinct(transform(shinglesOf(col("toks"), k),
           s => xxhash64(s))).as("shs"))
 
-  private val shingleTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM shingle-table memo. */
-  private[graft] def clearShingleTableMemo(): Unit = shingleTableCache.clear()
-
   /** The (doc_id, shs) shingle-set frame computed ONCE per (cacheKey, k)
     * and PUBLISHED — the walk-corpus discipline applied to the text
     * set-similarity family: `dedup_ngram_jaccard`, `dedup_containment`,
@@ -84,10 +78,9 @@ object Dedup {
     else {
       val fp = graft.engine.PublishGuard.fingerprint(
         docs, Seq(col("doc_id"), col("text")))
-      graft.engine.PublishGuard.sharedTable(
-        docs.sparkSession, shingleTableCache, baseDir,
-        "doc_shingles", cacheKey, Seq(s"k$k"), fp,
-        "doc shingle-set table")(() => shingleBase(docs, k))
+      graft.engine.PublishGuard.sharedTableWithNotes(
+        docs.sparkSession, baseDir, "doc_shingles", cacheKey, Seq(s"k$k"),
+        fp, "doc shingle-set table")(() => shingleBase(docs, k))._1
     }
 
   /** Exact dedup: group documents by the md5 of their normalized text; keep
@@ -818,16 +811,6 @@ object Dedup {
   def nearDupClusters(docs: DataFrame, k: Int = 3, threshold: Double = 0.5): DataFrame =
     clustersFromPairs(docs, ngramJaccardPairs(docs, k, threshold).select("doc_a", "doc_b"))
 
-  private val clusterTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: drop the in-JVM publish memo, simulating a fresh session.
-    * Cross-session reuse must then come from the `_SUCCESS`-marked table on
-    * the shared `baseDir` — exactly what DedupSpec's fresh-session spec
-    * asserts.
-    */
-  private[graft] def clearClusterTableMemo(): Unit = clusterTableCache.clear()
-
   /** [[nearDupClusters]] computed ONCE per `(cacheKey, k, threshold)` and
     * PUBLISHED as a parquet cluster table that every downstream corpus
     * recipe reads — the production dedup-once shape: curated-corpus
@@ -869,13 +852,12 @@ object Dedup {
       // in-JVM memo hits included — so a cache key that went stale after
       // the corpus changed fails loudly instead of silently serving
       // clusters computed from different data. The memo/probe/atomic-
-      // publish/verify dance itself is PublishGuard.sharedTable (extracted
-      // round 10; behavior and published paths unchanged).
+      // publish/verify dance itself is PublishGuard.sharedTableWithNotes.
       val fp = PublishGuard.fingerprint(docs, Seq(col("doc_id"), col("text")))
-      PublishGuard.sharedTable(
-        docs.sparkSession, clusterTableCache, baseDir, "near_dup_clusters",
-        cacheKey, Seq(s"k$k", s"t$threshold"), fp, "near-dup cluster table")(
-        () => nearDupClusters(docs, k, threshold))
+      PublishGuard.sharedTableWithNotes(
+        docs.sparkSession, baseDir, "near_dup_clusters", cacheKey,
+        Seq(s"k$k", s"t$threshold"), fp, "near-dup cluster table")(
+        () => nearDupClusters(docs, k, threshold))._1
     }
   }
 

@@ -403,19 +403,6 @@ object Graph {
     */
   private[graft] val BroadcastNodeThreshold = 1000000L
 
-  /** Memo for the published sym-adjacency tables. Deliberately SEPARATE
-    * from [[edgeTableCache]]: the sym publisher's compute() calls
-    * [[sharedTradeEdges]], and a nested `computeIfAbsent` on one
-    * ConcurrentHashMap throws "Recursive update" whenever the two keys
-    * hash into the same bin (hash-dependent, so it surfaced only at one
-    * scale factor).
-    */
-  private val symTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM sym-adjacency memo. */
-  private[graft] def clearSymTableMemo(): Unit = symTableCache.clear()
-
   /** A symmetrized, degree-annotated adjacency served from a PUBLISHED
     * table, with the publish-time facts every loop consumer otherwise
     * recomputes with a job per call: `rows` (the symmetrized edge count —
@@ -461,9 +448,10 @@ object Graph {
     require(cacheKey.nonEmpty,
       "sharedSymAdjacency needs a cache key (inline callers build the " +
         "adjacency live inside the loop operators)")
+    // the compute resolves the trade edges through the same memo
+    // (nested PublishGuard.once — safe: builds run outside the map lock)
     val (df, notes) = PublishGuard.sharedTableWithNotes(
-      orders.sparkSession, symTableCache, baseDir,
-      "sym_adjacency", cacheKey, Nil,
+      orders.sparkSession, baseDir, "sym_adjacency", cacheKey, Nil,
       tradeFingerprint(orders, lineitem),
       "symmetrized trade adjacency table",
       staged => Map(
@@ -486,8 +474,7 @@ object Graph {
     require(cacheKey.nonEmpty,
       "sharedSymWeightedAdjacency needs a cache key")
     val (df, notes) = PublishGuard.sharedTableWithNotes(
-      orders.sparkSession, symTableCache, baseDir,
-      "sym_adjacency_weighted", cacheKey, Nil,
+      orders.sparkSession, baseDir, "sym_adjacency_weighted", cacheKey, Nil,
       tradeFingerprint(orders, lineitem),
       "symmetrized weighted trade adjacency table",
       staged => Map(
@@ -1376,17 +1363,9 @@ object Graph {
     out
   }
 
-  private val triangleTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM publish memo, simulating a fresh session
-    * (cross-session reuse must then come from the `_SUCCESS`-marked table).
-    */
-  private[graft] def clearTriangleTableMemo(): Unit = triangleTableCache.clear()
-
   /** [[nodeTriangleStats]] of the co-purchase graph computed ONCE per
-    * cacheKey and PUBLISHED (PublishGuard.sharedTable: memo + `_SUCCESS`
-    * probe + atomic publish + fingerprint verify) — the round-9 verdict's
+    * cacheKey and PUBLISHED (PublishGuard.sharedTableWithNotes: memo +
+    * `_SUCCESS` probe + atomic publish + fingerprint verify) — the round-9 verdict's
     * compute-once ask: `graph_triangles` and `graph_clustering_coeff` each
     * ran the full Bloom-pruned triangle enumeration, making the most
     * expensive subplan in the repo execute twice in a profile that runs
@@ -1407,19 +1386,11 @@ object Graph {
     else {
       val fp = PublishGuard.fingerprint(
         lineitem, Seq(col("l_orderkey"), col("l_partkey")))
-      PublishGuard.sharedTable(
-        lineitem.sparkSession, triangleTableCache, baseDir,
-        "triangle_stats", cacheKey, Nil, fp, "triangle stats table")(live)
+      PublishGuard.sharedTableWithNotes(
+        lineitem.sparkSession, baseDir, "triangle_stats", cacheKey, Nil, fp,
+        "triangle stats table")(live)._1
     }
   }
-
-  private val edgeTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM edge-table memo (see
-    * [[clearTriangleTableMemo]]).
-    */
-  private[graft] def clearEdgeTableMemo(): Unit = edgeTableCache.clear()
 
   /** Two-input fingerprint for the trade-edge publishers: both pruned
     * input frames determine the edge set, so both must pin the sidecar.
@@ -1452,10 +1423,9 @@ object Graph {
       cacheKey: String, baseDir: String = ""): DataFrame = {
     def live() = tradeEdges(orders, lineitem)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      orders.sparkSession, edgeTableCache, baseDir,
-      "trade_edges", cacheKey, Nil,
-      tradeFingerprint(orders, lineitem), "trade edge table")(live)
+    else PublishGuard.sharedTableWithNotes(
+      orders.sparkSession, baseDir, "trade_edges", cacheKey, Nil,
+      tradeFingerprint(orders, lineitem), "trade edge table")(live)._1
   }
 
   /** [[weightedTradeEdges]] published once per cacheKey — the
@@ -1468,19 +1438,10 @@ object Graph {
       cacheKey: String, baseDir: String = ""): DataFrame = {
     def live() = weightedTradeEdges(orders, lineitem)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      orders.sparkSession, edgeTableCache, baseDir,
-      "trade_edges_weighted", cacheKey, Nil,
-      tradeFingerprint(orders, lineitem), "weighted trade edge table")(live)
+    else PublishGuard.sharedTableWithNotes(
+      orders.sparkSession, baseDir, "trade_edges_weighted", cacheKey, Nil,
+      tradeFingerprint(orders, lineitem), "weighted trade edge table")(live)._1
   }
-
-  private val walkTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook — drop the in-JVM walk-corpus memo (see
-    * [[clearTriangleTableMemo]]).
-    */
-  private[graft] def clearWalkTableMemo(): Unit = walkTableCache.clear()
 
   /** [[randomWalks]] over the full node set computed ONCE per cacheKey
     * and PUBLISHED — the round-13 verdict's compute-once ask: the walk
@@ -1500,11 +1461,11 @@ object Graph {
     def live() = randomWalks(
       edges, edges.select(col("u").as("walk_id")).distinct(), steps, salt)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      edges.sparkSession, walkTableCache, baseDir,
-      "walk_corpus", cacheKey, Seq(salt, s"st$steps"),
+    else PublishGuard.sharedTableWithNotes(
+      edges.sparkSession, baseDir, "walk_corpus", cacheKey,
+      Seq(salt, s"st$steps"),
       PublishGuard.fingerprint(edges, Seq(col("u"), col("v"))),
-      "walk corpus table")(live)
+      "walk corpus table")(live)._1
   }
 
   /** [[sageAdjacency]] published once per cacheKey — the round-16
@@ -1523,14 +1484,14 @@ object Graph {
       maxFanout: Int = 3, salt: String = "sage"): DataFrame = {
     def live() = sageAdjacency(edges, maxFanout, salt)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      edges.sparkSession, walkTableCache, baseDir,
+    else PublishGuard.sharedTableWithNotes(
+      edges.sparkSession, baseDir,
       // "m1": the metadata revision — round-17 stamps the build params on
       // the rnk column and sageSample validates them, so pre-stamp tables
       // must republish under a fresh slug rather than fail the check
       "sage_adjacency", cacheKey, Seq(salt, s"f$maxFanout", "m1"),
       PublishGuard.fingerprint(edges, Seq(col("u"), col("v"))),
-      "sage sampled adjacency table")(live)
+      "sage sampled adjacency table")(live)._1
   }
 
   /** [[node2vecWalks]] published once per cacheKey — the second-order
@@ -1546,11 +1507,11 @@ object Graph {
       edges, edges.select(col("u").as("walk_id")).distinct(),
       steps, p, q, salt)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      edges.sparkSession, walkTableCache, baseDir,
+    else PublishGuard.sharedTableWithNotes(
+      edges.sparkSession, baseDir,
       "node2vec_corpus", cacheKey, Seq(salt, s"st$steps", s"p$p", s"q$q"),
       PublishGuard.fingerprint(edges, Seq(col("u"), col("v"))),
-      "node2vec walk corpus table")(live)
+      "node2vec walk corpus table")(live)._1
   }
 
   // ── SGNS node embeddings over the published walk corpus ─────────────
@@ -1815,7 +1776,7 @@ object Graph {
 
   /** Read-through accessor for the PUBLISHED node-embedding table —
     * train once over the published walk corpus, publish `(node, vec)`,
-    * serve map-only everywhere ([[PublishGuard.publishedTableAt]]: the
+    * serve map-only everywhere ([[PublishGuard.publishedArtifact]]: the
     * fingerprint over the corpus pins reuse; a stale table rebuilds, a
     * concurrent publisher loses the atomic rename and reads the
     * winner's table). The published path is [[nodeEmbeddingPath]] — a
@@ -1847,25 +1808,23 @@ object Graph {
       corpus, Seq(col("walk_id"), col("step"), col("node")))
     val path = nodeEmbeddingPath(
       baseDir, slug, dim, negatives, iters, lr, window, miniBatches, salt)
-    val outPath = new org.apache.hadoop.fs.Path(path)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(outPath, "_SUCCESS")) &&
-        PublishGuard.readSidecar(fs, outPath) != Some(fp))
-        Some(spark.read.parquet(path))
-      else None
-    val itersUsed = prior.fold(iters)(_ => math.max(1, iters / 2))
-    PublishGuard.publishedTableAt(
+    val warmIters = math.max(1, iters / 2)
+    def train(itersUsed: Int, prior: Option[DataFrame]): DataFrame =
+      sgnsTrainEmbeddings(
+        walkContextPairs(corpus, window), dim, negatives, itersUsed, lr,
+        salt, miniBatches, warmStart = prior)
+    PublishGuard.publishedArtifact[DataFrame](
       spark, path, fp, s"published node embeddings '$slug'",
+      train = () => train(iters, None),
+      write = (df, p) => df.write.mode("overwrite").parquet(p),
+      load = () => spark.read.parquet(path),
+      warm = Some(prior => train(warmIters, Some(prior))),
       // provenance notes: the path's _i slug is the NOMINAL budget; the
       // sidecar records what this publish actually ran (warm refreshes
       // train at half budget — round-15 advice)
-      notes = Map(
-        "schedule" -> prior.fold("cold")(_ => "warm"),
-        "iters_run" -> itersUsed.toString))(() =>
-      sgnsTrainEmbeddings(
-        walkContextPairs(corpus, window), dim, negatives, itersUsed, lr,
-        salt, miniBatches, warmStart = prior))
+      notes = warmUsed => Map(
+        "schedule" -> (if (warmUsed) "warm" else "cold"),
+        "iters_run" -> (if (warmUsed) warmIters else iters).toString))
   }
 
   /** Top-k nearest nodes by embedding cosine for a bounded query cohort —
@@ -2238,11 +2197,11 @@ object Graph {
       cacheKey: String = "", baseDir: String = ""): DataFrame = {
     def live() = copurchaseEdgesSupported(lineitem, minSupport)
     if (cacheKey.isEmpty) live()
-    else PublishGuard.sharedTable(
-      lineitem.sparkSession, edgeTableCache, baseDir,
-      "copurchase_edges", cacheKey, Seq(s"sup$minSupport"),
+    else PublishGuard.sharedTableWithNotes(
+      lineitem.sparkSession, baseDir, "copurchase_edges", cacheKey,
+      Seq(s"sup$minSupport"),
       PublishGuard.fingerprint(
         lineitem, Seq(col("l_orderkey"), col("l_partkey"))),
-      "co-purchase edge table")(live)
+      "co-purchase edge table")(live)._1
   }
 }

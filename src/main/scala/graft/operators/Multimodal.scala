@@ -979,15 +979,6 @@ object Multimodal {
     */
   // ── dedup-once published modality cluster tables ────────────────────
 
-  private val modalityClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: drop the in-JVM publish memo (the
-    * [[graft.operators.Dedup.clearClusterTableMemo]] contract).
-    */
-  private[graft] def clearModalityClusterMemo(): Unit =
-    modalityClusterCache.clear()
-
   /** The [[graft.operators.Dedup.sharedNearDupClusters]] publish contract
     * for the modality cluster tables: computed ONCE per `cacheKey` and
     * published as a parquet table every consumer reads (the per-modality
@@ -1013,9 +1004,9 @@ object Multimodal {
     if (cacheKey.isEmpty) compute()
     else {
       val fp = graft.engine.PublishGuard.fingerprint(docs, fpCols)
-      graft.engine.PublishGuard.sharedTable(
-        docs.sparkSession, modalityClusterCache, baseDir, family,
-        cacheKey, Nil, fp, what)(compute)
+      graft.engine.PublishGuard.sharedTableWithNotes(
+        docs.sparkSession, baseDir, family, cacheKey, Nil, fp, what)(
+        compute)._1
     }
 
   /** Image phash dedup clusters, compute-once published (see

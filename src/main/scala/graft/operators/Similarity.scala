@@ -965,45 +965,12 @@ object Similarity {
   private[operators] def assignCluster(nv: Column, cents: Array[Array[Double]]): Column =
     probeStructs(nv, cents, 1).getItem(0).getField("i")
 
-  /** Memoized centroid store: train-once, search-many. Keyed by a
-    * caller-supplied corpus key (e.g. the dataset path) + params, so
-    * repeated searches — the bench's median-of-N runs, or a query service —
-    * never retrain. The cached value is nlist×dim doubles (bounded, tiny).
-    */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, Array[Array[Double]])]()
-
-  /** Input fingerprint for the training memos: one map-side pass over
-    * (vec_id, embedding) — stale-key violations of the memo contract must
-    * fail loudly, never silently serve centroids trained on other data.
+  /** Input fingerprint of the published training artifacts: one
+    * map-side pass over (vec_id, embedding) — a table trained on other
+    * data is rebuilt, never silently served.
     */
   private def embeddingFingerprint(embeddings: DataFrame): PublishGuard.Fingerprint =
     PublishGuard.fingerprint(embeddings, Seq(col("vec_id"), col("embedding")))
-
-  /** Centroids for `cacheKey`, training at most once per (key, params).
-    *
-    * CONTRACT: `cacheKey` must encode the DATA VERSION, not just its
-    * location — for mutable datasets, fold a version/snapshot id or a
-    * file-listing fingerprint (paths + mtimes) into the key, or pass
-    * `cacheKey = ""` to retrain per call. Violations are DETECTED: the
-    * memo records the training input's fingerprint and every reuse
-    * re-fingerprints the current input (map-side pass, no shuffle) —
-    * a stale key raises instead of bucketing with stale centroids.
-    */
-  def ivfCentroids(
-      embeddings: DataFrame,
-      nlist: Int = 16,
-      iters: Int = 3,
-      cacheKey: String = ""): Array[Array[Double]] =
-    if (cacheKey.isEmpty) trainIvfCentroids(embeddings, nlist, iters)
-    else {
-      val fp = embeddingFingerprint(embeddings)
-      val (storedFp, cents) = centroidCache.computeIfAbsent(
-        s"$cacheKey|$nlist|$iters",
-        _ => (fp, trainIvfCentroids(embeddings, nlist, iters)))
-      PublishGuard.verifyMemo(storedFp, fp, s"IVF centroids for key '$cacheKey'")
-      cents
-    }
 
   /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid
     * (map-only once trained); each query probes its `nprobe` closest
@@ -1011,8 +978,9 @@ object Similarity {
     * count ≈ nprobe/nlist of the corpus — the inverted-file scale path,
     * complementary to [[lshTopK]].
     *
-    * Training is split from search: pass `centroids` (or a `cacheKey` for
-    * the memo) so the k-means runs once per corpus, not per query call.
+    * Training is split from search: pass `centroids` (the published
+    * path, [[ivfTopKPublished]]) so the k-means runs once per corpus, not
+    * per query call.
     */
   def ivfTopK(
       embeddings: DataFrame,
@@ -1022,11 +990,10 @@ object Similarity {
       nprobe: Int = 4,
       iters: Int = 3,
       centroids: Option[Array[Array[Double]]] = None,
-      cacheKey: String = "",
       queryTable: Option[DataFrame] = None,
       broadcastQueries: Option[Boolean] = None,
       hierGroups: Option[(Array[Array[Double]], Int)] = None): DataFrame = {
-    val cents = centroids.getOrElse(ivfCentroids(embeddings, nlist, iters, cacheKey))
+    val cents = centroids.getOrElse(trainIvfCentroids(embeddings, nlist, iters))
     // the bucketed corpus feeds both the query side and the probe join
     val e = OpCache.materialize(
       Partitioning.ensureParallelism(embeddings, col("vec_id"))
@@ -1083,46 +1050,6 @@ object Similarity {
       .select("query_id", "rank", "vec_id", "cosine")
   }
 
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, Array[Array[Array[Double]]])]()
-
-  /** Test hook: drop the in-JVM read-through caches so a spec can simulate
-    * a FRESH session against an already-published artifact table.
-    */
-  private[graft] def clearTrainingCaches(): Unit = {
-    centroidCache.clear()
-    pqCache.clear()
-    groupCache.clear()
-  }
-
-  /** Product-quantization codebooks: the L2-normalized vectors are cut
-    * into `m` subspaces of dim/m components and each subspace gets its own
-    * `ksub`-centroid k-means codebook (plain Lloyd, deterministic init
-    * from the first `ksub` subvectors, means NOT renormalized — PQ
-    * centroids are plain averages). Returned as [m][ksub][dim/m] literal
-    * arrays; the collect per round is bounded at ksub × dim/m doubles.
-    *
-    * Same memo contract as [[ivfCentroids]]: `cacheKey` must encode the
-    * data version; empty key retrains per call; a stale key is detected
-    * via the recorded input fingerprint and raises.
-    */
-  def pqCodebooks(
-      embeddings: DataFrame,
-      m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 3,
-      dim: Int = 64,
-      cacheKey: String = ""): Array[Array[Array[Double]]] = {
-    if (cacheKey.isEmpty) trainPqCodebooks(embeddings, m, ksub, iters, dim)
-    else {
-      val fp = embeddingFingerprint(embeddings)
-      val (storedFp, books) = pqCache.computeIfAbsent(
-        s"$cacheKey|pq|$m|$ksub|$iters|$dim",
-        _ => (fp, trainPqCodebooks(embeddings, m, ksub, iters, dim)))
-      PublishGuard.verifyMemo(storedFp, fp, s"PQ codebooks for key '$cacheKey'")
-      books
-    }
-  }
 
   /** All `m` PQ subspace codes in ONE fused codegen'd pass
     * ([[graft.functions.PqCodesExpr]] — the [[probeStructs]] discipline
@@ -1144,7 +1071,14 @@ object Similarity {
   private def nearestCode(sv: Column, book: Array[Array[Double]]): Column =
     pqCodes(sv, Array(book), book(0).length).getItem(0)
 
-  /** `init` warm-starts each subspace's Lloyd rounds from a prior
+  /** Product-quantization codebooks: the L2-normalized vectors are cut
+    * into `m` subspaces of dim/m components and each subspace gets its own
+    * `ksub`-centroid k-means codebook (plain Lloyd, deterministic init
+    * from the first `ksub` subvectors, means NOT renormalized — PQ
+    * centroids are plain averages). Returned as [m][ksub][dim/m] literal
+    * arrays; the collect per round is bounded at ksub × dim/m doubles.
+    *
+    * `init` warm-starts each subspace's Lloyd rounds from a prior
     * codebook (round-15 verdict item 4 — see [[trainIvfCentroids]]).
     */
   def trainPqCodebooks(
@@ -1278,99 +1212,6 @@ object Similarity {
       .write.parquet(path)
   }
 
-  /** One code path for every published training artifact — the
-    * PUBLISHED TABLE is the single source of truth (round-6 verdict
-    * item 7; previously the in-JVM memo and the published table were two
-    * independent paths with separate fingerprint checks, and publication
-    * bypassed PublishGuard). Semantics are those of a materialized view
-    * keyed by the input fingerprint:
-    *
-    *  - table exists with a matching `_GRAFT_FINGERPRINT` sidecar → load
-    *    and serve its values (any session, any JVM);
-    *  - table missing → train, publish via [[PublishGuard.publishAtomic]]
-    *    (sidecar written INTO staging, so table + fingerprint appear
-    *    atomically), then read BACK from the published table — under a
-    *    publish race every JVM serves the winner's bits;
-    *  - table exists but the sidecar mismatches the CURRENT input →
-    *    the artifact is out of date: retrain and atomically republish
-    *    (never silently serve stale values, never hard-error on a mere
-    *    refresh — the loud-error contract of `verifyMemo`/`cacheKey` is
-    *    for user-claimed version tokens; a path-keyed table can always
-    *    be rebuilt from the data in front of us). One retry: if the
-    *    republished sidecar STILL mismatches, a concurrent publisher is
-    *    training on different data under the same path — that is the
-    *    unresolvable conflict, and it throws.
-    *
-    * The in-JVM `cache` is a READ-THROUGH cache over the table only: it
-    * can skip the filesystem read for repeated plan builds (bench's
-    * median-of-N), but its hit is honored only when the memoized
-    * fingerprint matches the current input — otherwise it falls through
-    * to the table logic above.
-    */
-  /** `warm` (optional) retrains a STALE artifact seeded from the prior
-    * published value instead of from scratch — the
-    * [[graft.operators.Graph.publishedNodeEmbeddings]] warm-start
-    * discipline generalized to the whole artifact family (round-15
-    * verdict item 4). The prior value is loaded BEFORE the staging-first
-    * replace (the live table stays readable throughout); an unreadable
-    * prior falls back to the cold `train`. `notes(warmUsed)` lands in the
-    * sidecar so the EFFECTIVE schedule of the table on disk is recorded
-    * (the path slug carries only the nominal hyperparameters).
-    */
-  private[operators] def publishedArtifact[A](
-      spark: SparkSession,
-      path: String,
-      paramsKey: String,
-      fp: PublishGuard.Fingerprint,
-      cache: java.util.concurrent.ConcurrentHashMap[String, (PublishGuard.Fingerprint, A)],
-      train: () => A,
-      write: (A, String) => Unit,
-      load: () => A,
-      what: String,
-      warm: Option[A => A] = None,
-      notes: Boolean => Map[String, String] = _ => Map.empty): A = {
-    val key = s"published|$path|$paramsKey"
-    val hit = cache.get(key)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val outPath = new org.apache.hadoop.fs.Path(path)
-      val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def publish(): Unit = PublishGuard.publishAtomic(spark, path) { staging =>
-        write(train(), staging)
-        PublishGuard.writeSidecar(
-          fs, new org.apache.hadoop.fs.Path(staging), fp, notes(false))
-      }
-      if (!fs.exists(outPath)) publish()
-      else if (PublishGuard.readSidecar(fs, outPath) != Some(fp)) {
-        // out-of-date (or sidecar-less pre-refactor) artifact: rebuild —
-        // staging-first (PublishGuard.replaceAtomic), so concurrent
-        // readers of the live table see at most the delete→rename
-        // metadata window, never the retraining gap. With `warm`, the
-        // prior table (still live) seeds the retrain.
-        val (retrain, warmUsed) = warm match {
-          case Some(wf) =>
-            val prior =
-              try Some(load())
-              catch { case scala.util.control.NonFatal(_) => None }
-            prior match {
-              case Some(p) => (() => wf(p), true)
-              case None => (train, false)
-            }
-          case None => (train, false)
-        }
-        PublishGuard.replaceAtomic(spark, path) { staging =>
-          write(retrain(), staging)
-          PublishGuard.writeSidecar(
-            fs, new org.apache.hadoop.fs.Path(staging), fp, notes(warmUsed))
-        }
-      }
-      PublishGuard.verifySidecar(fs, outPath, fp, what)
-      val value = load()
-      cache.put(key, (fp, value))
-      value
-    }
-  }
-
   /** Semantic deduplication over the published IVF clustering — the
     * SemDeDup recipe (Abbas et al., "SemDeDup: Data-efficient learning
     * at web-scale through semantic deduplication", 2023 — public
@@ -1430,7 +1271,7 @@ object Similarity {
   /** Canonical published paths for the trained-artifact tables: every
     * non-data training hyperparameter rides the path (round-15, the
     * [[graft.operators.Graph.nodeEmbeddingPath]] discipline extended to
-    * the whole publishedArtifact family — previously the path carried
+    * the whole published-artifact family — previously the path carried
     * only the caller slug, so changing nlist/m/ksub/outDims silently
     * served a table trained under the OLD hyperparameters: the sidecar
     * pins only the DATA version). One definition per artifact, shared by
@@ -1456,8 +1297,8 @@ object Similarity {
     s"$baseDir/${slug}_o${outDims}_d$dim"
 
   /** Read-through accessor for published IVF centroids — see
-    * [[publishedArtifact]] for the reuse/rebuild contract; path is
-    * [[ivfCentroidsPath]] (hyperparams ride the path).
+    * [[PublishGuard.publishedArtifact]] for the reuse/rebuild contract;
+    * path is [[ivfCentroidsPath]] (hyperparams ride the path).
     */
   def publishedIvfCentroids(
       embeddings: DataFrame,
@@ -1469,15 +1310,14 @@ object Similarity {
     val spark = embeddings.sparkSession
     val path = ivfCentroidsPath(baseDir, slug, nlist, iters, trainSampleCap)
     val warmIters = math.max(1, iters / 2)
-    publishedArtifact[Array[Array[Double]]](
-      spark, path, s"$nlist|$iters|$trainSampleCap",
-      embeddingFingerprint(embeddings), centroidCache,
+    PublishGuard.publishedArtifact[Array[Array[Double]]](
+      spark, path, embeddingFingerprint(embeddings),
+      s"published IVF centroids '$slug'",
       train = () => trainIvfCentroids(embeddings, nlist, iters,
         sampleCap = trainSampleCap),
       write = (cents, p) => writeCentroidTable(spark, cents, p),
       load = () => spark.read.parquet(path).orderBy("list_id").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray),
-      what = s"published IVF centroids '$slug'",
       // data refresh under the same path: seed Lloyd from the prior
       // published centroids at half the iteration budget (round-15
       // verdict item 4; params-in-path guarantees the prior table was
@@ -1487,11 +1327,9 @@ object Similarity {
           sampleCap = trainSampleCap)),
       notes = warmUsed => Map(
         "schedule" -> (if (warmUsed) "warm" else "cold"),
-        "iters_run" -> (if (warmUsed) warmIters else iters).toString))
+        "iters_run" -> (if (warmUsed) warmIters else iters).toString),
+      memoFamily = Some("ivf_centroids"))
   }
-
-  private val groupCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, Array[Array[Double]])]()
 
   /** Two-level coarse quantizer, level 1: k-means over the PUBLISHED IVF
     * centroids themselves (round-16 verdict item 2's "genuinely flat"
@@ -1530,21 +1368,21 @@ object Similarity {
     require(cents.length == nlist,
       s"centroid table carries ${cents.length} rows, expected nlist=$nlist")
     val path = ivfGroupsPath(baseDir, slug, nlist, iters, ng, giters)
-    publishedArtifact[Array[Array[Double]]](
-      spark, path, s"groups|$nlist|$iters|$ng|$giters",
-      embeddingFingerprint(embeddings), groupCache,
+    PublishGuard.publishedArtifact[Array[Array[Double]]](
+      spark, path, embeddingFingerprint(embeddings),
+      s"published IVF centroid groups '$slug'",
       train = () => trainCentroidGroups(cents, ng, giters),
       write = (g, p) => writeGroupTable(spark, g, p),
       load = () => spark.read.parquet(path).orderBy("group_id").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray),
-      what = s"published IVF centroid groups '$slug'",
       // warm refresh: re-group from the prior group centroids at half
       // budget (the publishedIvfCentroids discipline)
       warm = Some(prior => trainCentroidGroups(
         cents, ng, math.max(1, giters / 2), init = Some(prior))),
       notes = warmUsed => Map(
         "schedule" -> (if (warmUsed) "warm" else "cold"),
-        "iters_run" -> (if (warmUsed) math.max(1, giters / 2) else giters).toString))
+        "iters_run" -> (if (warmUsed) math.max(1, giters / 2) else giters).toString),
+      memoFamily = Some("ivf_groups"))
   }
 
   /** ngroups default: ⌈√nlist⌉ — balances the two selection stages
@@ -1643,7 +1481,7 @@ object Similarity {
   }
 
   /** Read-through accessor for published PQ codebooks — see
-    * [[publishedArtifact]] for the reuse/rebuild contract.
+    * [[PublishGuard.publishedArtifact]] for the reuse/rebuild contract.
     */
   def publishedPqCodebooks(
       embeddings: DataFrame,
@@ -1656,9 +1494,9 @@ object Similarity {
     val spark = embeddings.sparkSession
     val path = pqCodebooksPath(baseDir, slug, m, ksub, iters, dim)
     val warmIters = math.max(1, iters / 2)
-    publishedArtifact[Array[Array[Array[Double]]]](
-      spark, path, s"pq|$m|$ksub|$iters|$dim",
-      embeddingFingerprint(embeddings), pqCache,
+    PublishGuard.publishedArtifact[Array[Array[Array[Double]]]](
+      spark, path, embeddingFingerprint(embeddings),
+      s"published PQ codebooks '$slug'",
       train = () => trainPqCodebooks(embeddings, m, ksub, iters, dim),
       write = (books, p) => writeCodebookTable(spark, books, p),
       load = () => {
@@ -1668,7 +1506,6 @@ object Similarity {
             .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
         }.toArray
       },
-      what = s"published PQ codebooks '$slug'",
       // same warm-refresh discipline as publishedIvfCentroids: per-subspace
       // Lloyd seeded from the prior published codebooks at half budget
       warm = Some(prior =>
@@ -1676,7 +1513,8 @@ object Similarity {
           init = Some(prior))),
       notes = warmUsed => Map(
         "schedule" -> (if (warmUsed) "warm" else "cold"),
-        "iters_run" -> (if (warmUsed) warmIters else iters).toString))
+        "iters_run" -> (if (warmUsed) warmIters else iters).toString),
+      memoFamily = Some("pq_codebooks"))
   }
 
   /** [[pqTopK]] with the training/serving split made physical — the same
@@ -1700,7 +1538,7 @@ object Similarity {
       dim: Int = 64,
       queryTable: Option[DataFrame] = None): DataFrame = {
     val books = publishedPqCodebooks(embeddings, baseDir, slug, m, ksub, 3, dim)
-    pqTopK(embeddings, numQueries, k, m, ksub, rerank, dim, "", Some(books),
+    pqTopK(embeddings, numQueries, k, m, ksub, rerank, dim, Some(books),
       queryTable = queryTable)
   }
 
@@ -1727,7 +1565,7 @@ object Similarity {
     val cents = publishedIvfCentroids(embeddings, baseDir, s"${slug}_centroids", nlist, 3)
     val books = publishedPqCodebooks(embeddings, baseDir, s"${slug}_codebooks", m, ksub, 3, dim)
     ivfPqTopK(embeddings, numQueries, k, nlist, nprobe, m, ksub, rerank, dim,
-      "", Some(cents), Some(books), queryTable = queryTable)
+      Some(cents), Some(books), queryTable = queryTable)
   }
 
   /** ANN top-k via product quantization with asymmetric distance (ADC):
@@ -1752,10 +1590,9 @@ object Similarity {
       ksub: Int = 16,
       rerank: Int = 50,
       dim: Int = 64,
-      cacheKey: String = "",
       codebooks: Option[Array[Array[Array[Double]]]] = None,
       queryTable: Option[DataFrame] = None): DataFrame = {
-    val books = codebooks.getOrElse(pqCodebooks(embeddings, m, ksub, 3, dim, cacheKey))
+    val books = codebooks.getOrElse(trainPqCodebooks(embeddings, m, ksub, 3, dim))
     val dsub = dim / m
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -1850,12 +1687,11 @@ object Similarity {
       ksub: Int = 16,
       rerank: Int = 50,
       dim: Int = 64,
-      cacheKey: String = "",
       centroids: Option[Array[Array[Double]]] = None,
       codebooks: Option[Array[Array[Array[Double]]]] = None,
       queryTable: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse(ivfCentroids(embeddings, nlist, 3, cacheKey))
-    val books = codebooks.getOrElse(pqCodebooks(embeddings, m, ksub, 3, dim, cacheKey))
+    val cents = centroids.getOrElse(trainIvfCentroids(embeddings, nlist, 3))
+    val books = codebooks.getOrElse(trainPqCodebooks(embeddings, m, ksub, 3, dim))
     val dsub = dim / m
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -2039,9 +1875,6 @@ object Similarity {
 
   // ── PCA projection (published rotation, oracle-replayable serving) ────
 
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, (Array[Double], Array[Array[Double]]))]()
-
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix — pure Scala,
     * no library dependency, fully deterministic (fixed sweep order, fixed
     * convergence test). Returns (eigenvalues, eigenvector COLUMNS). At
@@ -2160,8 +1993,8 @@ object Similarity {
   }
 
   /** Read-through accessor for the published PCA artifact — see
-    * [[publishedArtifact]] for the reuse/rebuild contract. Table rows:
-    * (component, mean, rot[outDims]) — one per input dimension.
+    * [[PublishGuard.publishedArtifact]] for the reuse/rebuild contract.
+    * Table rows: (component, mean, rot[outDims]) — one per input dimension.
     */
   def publishedPca(
       embeddings: DataFrame,
@@ -2171,9 +2004,9 @@ object Similarity {
       dim: Int = 64): (Array[Double], Array[Array[Double]]) = {
     val spark = embeddings.sparkSession
     val path = pcaPath(baseDir, slug, outDims, dim)
-    publishedArtifact[(Array[Double], Array[Array[Double]])](
-      spark, path, s"pca|$outDims|$dim",
-      embeddingFingerprint(embeddings), pcaCache,
+    PublishGuard.publishedArtifact[(Array[Double], Array[Array[Double]])](
+      spark, path, embeddingFingerprint(embeddings),
+      s"published PCA rotation '$slug'",
       train = () => trainPca(embeddings, outDims, dim),
       write = (art, p) => writePcaTable(spark, art._1, art._2, p),
       load = () => {
@@ -2182,7 +2015,7 @@ object Similarity {
         val rot = rows.map(_.getAs[scala.collection.Seq[Double]]("rot").toArray)
         (means, rot)
       },
-      what = s"published PCA rotation '$slug'")
+      memoFamily = Some("pca"))
   }
 
   /** PCA projection serving from the PUBLISHED rotation: y = Rᵀ(x − μ)
@@ -2224,9 +2057,6 @@ object Similarity {
       graft.functions.OracleRound.roundN(sqrt(normSq), 6))
   }
 
-  private val whitenCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PublishGuard.Fingerprint, Array[Double])]()
-
   /** Read-through accessor for the published PCA-whitening scales —
     * per-component 1/√(mean square) of the PUBLISHED projection (PCA
     * output is centered by construction, so the mean square IS the
@@ -2247,9 +2077,9 @@ object Similarity {
     // pcaSlug is a LOCATION, not a semantic parameter: same data + same
     // (outDims, dim) trains the same rotation wherever it is published
     val path = whitenPath(baseDir, slug, outDims, dim)
-    publishedArtifact[Array[Double]](
-      spark, path, s"$pcaSlug|$outDims|$dim",
-      embeddingFingerprint(embeddings), whitenCache,
+    PublishGuard.publishedArtifact[Array[Double]](
+      spark, path, embeddingFingerprint(embeddings),
+      s"published whitening scales '$slug'",
       train = () => {
         val proj = pcaProjectPublished(embeddings, baseDir, pcaSlug, outDims, dim)
         val row = proj.agg(
@@ -2267,7 +2097,7 @@ object Similarity {
       },
       load = () => spark.read.parquet(path).orderBy("component").collect()
         .map(_.getDouble(1)),
-      what = s"published whitening scales '$slug'")
+      memoFamily = Some("whiten"))
   }
 
   /** PCA whitening against BOTH published artifacts (rotation + scales):

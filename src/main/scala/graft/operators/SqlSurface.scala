@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{PublishGuard, Tables}
 
 /** The `spark.sql` entry point of the engine: temp-view registration plus
   * ANSI-SQL queries — a user of the reference's DataFrame surface can also
@@ -50,7 +50,7 @@ object SqlSurface {
   def registerLlmViews(
       spark: SparkSession,
       sfDir: String,
-      baseDir: String = "/tmp/graft_warehouse",
+      baseDir: String = PublishGuard.ArtifactWarehouse,
       minhashThreshold: Double = 0.5,
       ivfQueries: Int = 10,
       ivfK: Int = 5,
@@ -113,7 +113,7 @@ object SqlSurface {
       sfDir: String,
       ivfQueryView: Option[String] = None,
       bm25QueryView: Option[String] = None,
-      baseDir: String = "/tmp/graft_warehouse",
+      baseDir: String = PublishGuard.ArtifactWarehouse,
       ivfK: Int = 5,
       nlist: Int = 16,
       nprobe: Int = 4,

@@ -344,7 +344,7 @@ class DedupSpec extends AnyFunSuite {
     // fresh session: drop the in-JVM memo, ask for the same key with the
     // same docs — the result must come from the PUBLISHED table (its
     // input files live under the warehouse dir), not a recompute
-    Dedup.clearClusterTableMemo()
+    graft.engine.PublishGuard.forget("near_dup_clusters")
     val rereadDf = Dedup.sharedNearDupClusters(docs, cacheKey = key, baseDir = base)
     assert(rereadDf.inputFiles.nonEmpty &&
       rereadDf.inputFiles.forall(_.contains("near_dup_clusters")),
@@ -352,7 +352,7 @@ class DedupSpec extends AnyFunSuite {
     assert(toMap(rereadDf) == published)
     // stale key: same key, DIFFERENT data ⇒ the fingerprint sidecar makes
     // this a loud error, never a silently-served stale cluster table
-    Dedup.clearClusterTableMemo()
+    graft.engine.PublishGuard.forget("near_dup_clusters")
     val decoy = docs.limit(10)
     val err = intercept[IllegalStateException] {
       Dedup.sharedNearDupClusters(decoy, cacheKey = key, baseDir = base).count()

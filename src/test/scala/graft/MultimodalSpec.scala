@@ -16,6 +16,10 @@ import graft.operators.{MediaHeaders, Multimodal}
 class MultimodalSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
+  /** Fresh-session simulation: drop the memoized modality cluster tables. */
+  private def forgetModalityClusters(): Unit = graft.engine.PublishGuard
+    .forget("image_phash_clusters", "audio_fp_clusters", "video_fh_clusters")
+
   lazy val spark: SparkSession = graft.engine.Sessions
     .builder("graft-test").master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -492,7 +496,7 @@ class MultimodalSpec extends AnyFunSuite {
       assert(toMap(shared()) === live, s"$m published clusters diverged")
     }
     // fresh session: the result must come from the PUBLISHED tables
-    Multimodal.clearModalityClusterMemo()
+    forgetModalityClusters()
     livePairs.foreach { case (m, live, shared) =>
       val reread = shared()
       assert(reread.inputFiles.nonEmpty &&
@@ -501,7 +505,7 @@ class MultimodalSpec extends AnyFunSuite {
       assert(toMap(reread) === live)
     }
     // stale key: same key, different data ⇒ loud error, never stale serves
-    Multimodal.clearModalityClusterMemo()
+    forgetModalityClusters()
     val err = intercept[IllegalStateException] {
       Multimodal.sharedImageClusters(spark, docs.limit(10), key, base).count()
     }
@@ -522,14 +526,14 @@ class MultimodalSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, concat, lit}
     val changed = docs.withColumn(
       "text", concat(col("text"), lit(" drifted")))
-    Multimodal.clearModalityClusterMemo()
+    forgetModalityClusters()
     val err = intercept[IllegalStateException] {
       Multimodal.sharedAudioClusters(spark, changed, keyA, base).count()
     }
     assert(err.getMessage.contains("DIFFERENT input"))
     // image payloads are a pure function of doc_id: the SAME text change
     // leaves the published image clusters valid, and reuse still serves
-    Multimodal.clearModalityClusterMemo()
+    forgetModalityClusters()
     val reread = Multimodal.sharedImageClusters(spark, changed, keyI, base)
     assert(reread.inputFiles.nonEmpty &&
       reread.inputFiles.forall(_.contains("_clusters")),

@@ -1322,7 +1322,7 @@ class OperatorsSpec extends AnyFunSuite {
       (col("doc_id") + 100000L).as("doc_id"),
       concat(col("text"), lit(" zqx")).as("text"),
       col("lang"), col("source"), (col("n_chars") + 4).as("n_chars")))
-    Curation.clearClassifierMemo()
+    graft.engine.PublishGuard.forget("classifier_weights")
     val warm = Curation.publishedClassifierWeights(docs2, wh, "clf_warm", iters = iters)
     val notes2 = graft.engine.PublishGuard.readSidecarNotes(fs, pubPath)
     assert(notes2.get("schedule") === Some("warm") &&

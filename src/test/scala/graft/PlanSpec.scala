@@ -284,13 +284,14 @@ class PlanSpec extends AnyFunSuite {
     val last = d.split('/').last
     val edges = Graph.sharedTradeEdges(
       Tables.orders(spark, d), Tables.lineitem(spark, d), cacheKey = d)
+    val wh = graft.engine.PublishGuard.ArtifactWarehouse
     val emb = Graph.publishedNodeEmbeddings(
       Graph.sharedWalkCorpus(edges, cacheKey = d),
-      baseDir = "/tmp/graft_warehouse", slug = s"node_emb_$last")
+      baseDir = wh, slug = s"node_emb_$last")
     val cohort = Tables.orders(spark, d).where(col("o_custkey") < 10)
       .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct()
     def pruned(bq: Option[Boolean]) = Graph.embeddingNeighborsIvfPruned(
-      emb, cohort, "/tmp/graft_warehouse", s"node_emb_ivf_$last",
+      emb, cohort, wh, s"node_emb_ivf_$last",
       broadcastQueries = bq)
     try {
       // 1. centroids ride the plan as task-binary DATA, never as Literal

@@ -13,6 +13,12 @@ import graft.operators.Similarity
 class SimilaritySpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
+  /** Fresh-session simulation: drop the memoized training artifacts, so
+    * reuse must come from the published tables.
+    */
+  private def forgetTrainingArtifacts(): Unit = graft.engine.PublishGuard
+    .forget("ivf_centroids", "pq_codebooks", "ivf_groups")
+
   lazy val spark: SparkSession = graft.engine.Sessions
     .builder("graft-test").master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -71,25 +77,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.5, s"IVF recall@5 $recall below floor")
   }
 
-  test("stale centroid/codebook memo keys fail loudly instead of serving") {
-    val emb = Tables.embeddings(spark, sf)
-    val key = s"stale-memo-${System.nanoTime()}"
-    Similarity.ivfCentroids(emb, cacheKey = key)
-    Similarity.pqCodebooks(emb, cacheKey = key)
-    // same key, same data: memo hit, no error
-    Similarity.ivfCentroids(emb, cacheKey = key)
-    // same key, DIFFERENT data: the recorded input fingerprint mismatches
-    val mutated = emb.limit(50)
-    val e1 = intercept[IllegalStateException] {
-      Similarity.ivfCentroids(mutated, cacheKey = key)
-    }
-    assert(e1.getMessage.contains("DIFFERENT input"))
-    val e2 = intercept[IllegalStateException] {
-      Similarity.pqCodebooks(mutated, cacheKey = key)
-    }
-    assert(e2.getMessage.contains("DIFFERENT input"))
-  }
-
   test("published artifacts: fresh sessions reuse the table, stale input rebuilds") {
     import org.apache.hadoop.fs.Path
     val emb = Tables.embeddings(spark, sf)
@@ -108,7 +95,7 @@ class SimilaritySpec extends AnyFunSuite {
     val t1 = token(c1dir)
     // 2. FRESH SESSION (cleared in-JVM cache): same input must be served
     //    from the published table — no retrain, no republish
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val v2 = Similarity.publishedIvfCentroids(emb, base, "c1")
     assert(token(c1dir) == t1, "fresh-session reuse must not republish")
     assert(v2.map(_.toSeq).toSeq == v1.map(_.toSeq).toSeq,
@@ -119,7 +106,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(v2.map(_.toSeq).toSeq == tableVals)
     // 3. same path, DIFFERENT input: the artifact is out of date → atomic
     //    rebuild (fresh publisher token), not a stale serve and not an error
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val sub = emb.where(org.apache.spark.sql.functions.col("vec_id") < 60)
     val v3 = Similarity.publishedIvfCentroids(sub, base, "c1")
     val t3 = token(c1dir)
@@ -127,13 +114,13 @@ class SimilaritySpec extends AnyFunSuite {
     assert(v3.map(_.toSeq).toSeq != v1.map(_.toSeq).toSeq,
       "rebuilt centroids should differ on different input")
     // 4. rebuilt table is then reusable from a fresh session again
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     Similarity.publishedIvfCentroids(sub, base, "c1")
     assert(token(c1dir) == t3, "second fresh-session reuse must not republish")
     // PQ codebooks ride the same code path — one reuse check
     val b1 = Similarity.publishedPqCodebooks(emb, base, "b1")
     val tb = token(b1dir)
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val b2 = Similarity.publishedPqCodebooks(emb, base, "b1")
     assert(token(b1dir) == tb && b2.length == b1.length)
     // 5. a changed HYPERPARAMETER lands at a NEW path and trains fresh —
@@ -254,7 +241,7 @@ class SimilaritySpec extends AnyFunSuite {
         (col("vec_id") + 100000L).as("vec_id"),
         transform(graft.functions.VectorOps.asDouble(col("embedding")),
           x => x * 1.01).as("embedding")))
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val warm = Similarity.publishedIvfCentroids(emb2, base, "warm_c")
     val notes2 = graft.engine.PublishGuard.readSidecarNotes(fs, cDir)
     assert(notes2.get("schedule") === Some("warm") &&
@@ -277,12 +264,12 @@ class SimilaritySpec extends AnyFunSuite {
     assert(qWarm >= 0.95 * qCold,
       f"warm half-budget quantization $qWarm%.4f < 95%% of cold $qCold%.4f")
     // publish contract unchanged: a fresh-session re-read serves the table
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val again = Similarity.publishedIvfCentroids(emb2, base, "warm_c")
     assert(again.map(_.toSeq).toSeq == warm.map(_.toSeq).toSeq)
     // PQ codebooks ride the same warm path
     Similarity.publishedPqCodebooks(emb, base, "warm_b")
-    Similarity.clearTrainingCaches()
+    forgetTrainingArtifacts()
     val bWarm = Similarity.publishedPqCodebooks(emb2, base, "warm_b")
     val bDir = new Path(Similarity.pqCodebooksPath(base, "warm_b"))
     val bNotes = graft.engine.PublishGuard.readSidecarNotes(fs, bDir)
