@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
 import graft.operators.Graph
+import graft.queries.GraphQueries
 
 /** Measures the PRODUCTION IVF serving spelling at a query cohort that
   * NEEDS pruning — every customer node, not the 10-node oracle cohort
@@ -66,14 +67,13 @@ object IvfServingBench {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val last = sfDir.split('/').last
     val wh = graft.engine.PublishGuard.ArtifactWarehouse
     val edges = Graph.sharedTradeEdges(
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir),
       cacheKey = sfDir)
     val emb = Graph.publishedNodeEmbeddings(
       Graph.sharedWalkCorpus(edges, cacheKey = sfDir),
-      baseDir = wh, slug = s"node_emb_$last")
+      baseDir = wh, slug = GraphQueries.nodeEmbSlug(sfDir))
     val corpusN = emb.count()
     // the IVF deployment contract: nlist ∝ corpus (~250 vectors/bucket),
     // so candidates/query ≈ nprobe·250 stay BOUNDED as the corpus grows —
@@ -93,7 +93,7 @@ object IvfServingBench {
     val sample = cohort.where(
       abs(xxhash64(col("node"))) % sampleEvery === 0L)
     val nSample = sample.count()
-    val slug = s"node_emb_ivf_$last"
+    val slug = GraphQueries.nodeEmbIvfSlug(sfDir)
     def act(df: DataFrame): Unit = {
       df.selectExpr("bit_xor(xxhash64(struct(*)))").collect(): Unit
     }

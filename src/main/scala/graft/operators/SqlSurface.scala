@@ -21,6 +21,9 @@ object SqlSurface {
     graft.functions.GraftFunctions.register(spark)
   }
 
+  /** Slug of the IVF centroids the SQL views publish and serve from. */
+  def ivfSlug(sfDir: String): String = s"sqlivf_${sfDir.split('/').last}"
+
   /** Run a SQL query against the registered views. */
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {
     registerViews(spark, sfDir)
@@ -80,7 +83,7 @@ object SqlSurface {
       .createOrReplaceTempView("graft_minhash_pairs")
     Similarity.ivfTopKPublished(
       Tables.embeddings(spark, sfDir), baseDir,
-      s"sqlivf_${sfDir.split('/').last}", ivfQueries, ivfK, nlist, nprobe)
+      ivfSlug(sfDir), ivfQueries, ivfK, nlist, nprobe)
       .createOrReplaceTempView("graft_ivf_topk")
     TextAnalysis.bm25TopK(docs, bm25Queries, bm25TopDocs)
       .createOrReplaceTempView("graft_bm25_topk")
@@ -144,7 +147,7 @@ object SqlSurface {
       // one train, every SQL consumer
       Similarity.ivfTopKPublished(
         Tables.embeddings(spark, sfDir), baseDir,
-        s"sqlivf_${sfDir.split('/').last}", k = ivfK, nlist = nlist,
+        ivfSlug(sfDir), k = ivfK, nlist = nlist,
         nprobe = nprobe, queryTable = Some(q))
         .createOrReplaceTempView("graft_ivf_search")
     }

@@ -148,39 +148,40 @@ class PlanSpec extends AnyFunSuite {
     // codes (the whole point: the scan reads one long per vector)
     "sim_hamming_topk")
 
-  test("no cartesian product in any query plan; nested loops only where bounded") {
+  test("every query: plan guards hold and release leaves nothing persisted") {
+    // ONE sweep over the whole surface: each query is built once and that
+    // frame is judged three ways — its physical plan, its optimized plan,
+    // and the block manager after running it.
+    //
     // defend against sibling suites of the shared session having toggled
     // join-strategy confs — this sweep judges the library's plans under
     // the engine defaults
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    // sweep whatever sibling suites sharing this session left behind
+    OpCache.release(spark)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
+      val df = SparkEntry.queries(name)(spark, sf)
+
+      val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct")
       if (!boundedNestedLoop(name))
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name plans an undocumented BroadcastNestedLoopJoin")
-      // operator-internal materializations run eagerly at plan build —
-      // release them so the sweep doesn't accumulate blocks
-      OpCache.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-  }
 
-  test("no unpartitioned window over unbounded input in any query plan") {
-    // an unpartitioned Window serializes its whole input through ONE
-    // reducer — the round-3 scale-killer in tokenBudgetSelect and
-    // qualityDeciles. The only allowed shape is GlobalOrder's offset
-    // table: a window whose subtree aggregates by the __gpid partition id,
-    // which bounds the window's input at the shuffle partition count.
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
-      val offenders = plan.collect {
+      // an unpartitioned Window serializes its whole input through ONE
+      // reducer — the round-3 scale-killer in tokenBudgetSelect and
+      // qualityDeciles. The only allowed shape is GlobalOrder's offset
+      // table: a window whose subtree aggregates by the __gpid partition
+      // id, which bounds the window's input at the shuffle partition count.
+      val offenders = df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
           w.child.collectFirst {
             case a: Aggregate if a.groupingExpressions.exists {
@@ -191,10 +192,20 @@ class PlanSpec extends AnyFunSuite {
       }
       assert(offenders.isEmpty,
         s"$name plans an unpartitioned window over unbounded input")
+
+      // the OpCache contract (round-2 verdict "What's wrong" #2): after
+      // fully materializing the query and calling OpCache.release, no
+      // operator-internal persist / localCheckpoint blocks remain
+      // registered with the SparkContext — a long-lived session (a query
+      // service, this test JVM) composing graft operators does not
+      // accumulate block-manager memory per call
+      df.count()
       OpCache.release(spark)
+      val left = spark.sparkContext.getPersistentRDDs
+      assert(left.isEmpty,
+        s"$name leaked ${left.size} persisted RDDs after release: " +
+          left.map { case (id, r) => s"$id:${r.name}" }.mkString(", "))
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -280,18 +291,18 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.DoubleType
     import graft.engine.Tables
     import graft.operators.Graph
+    import graft.queries.GraphQueries
     val d = sf
-    val last = d.split('/').last
     val edges = Graph.sharedTradeEdges(
       Tables.orders(spark, d), Tables.lineitem(spark, d), cacheKey = d)
     val wh = graft.engine.PublishGuard.ArtifactWarehouse
     val emb = Graph.publishedNodeEmbeddings(
       Graph.sharedWalkCorpus(edges, cacheKey = d),
-      baseDir = wh, slug = s"node_emb_$last")
+      baseDir = wh, slug = GraphQueries.nodeEmbSlug(d))
     val cohort = Tables.orders(spark, d).where(col("o_custkey") < 10)
       .select(concat(lit("c:"), col("o_custkey")).as("node")).distinct()
     def pruned(bq: Option[Boolean]) = Graph.embeddingNeighborsIvfPruned(
-      emb, cohort, wh, s"node_emb_ivf_$last",
+      emb, cohort, wh, GraphQueries.nodeEmbIvfSlug(d),
       broadcastQueries = bq)
     try {
       // 1. centroids ride the plan as task-binary DATA, never as Literal

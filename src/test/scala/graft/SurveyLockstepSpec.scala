@@ -23,10 +23,14 @@ class SurveyLockstepSpec extends AnyFunSuite {
       s"queries missing from SURVEY.md (add a §8 row): ${missing.mkString(", ")}")
   }
 
-  test("every oracleSql key has a queries entry and vice versa") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q diff o).isEmpty, s"queries without an oracle: ${(q diff o).toSeq.sorted}")
-    assert((o diff q).isEmpty, s"oracles without a query: ${(o diff q).toSeq.sorted}")
+  test("spec names are distinct and queries/oracleSql share one key set") {
+    // each QuerySpec carries its own oracle, so a name can only go missing
+    // from one map by being defined twice — the derived Maps would keep
+    // one of the two silently
+    val names = graft.queries.QuerySpec.all.map(_.name)
+    val dupes = names.diff(names.distinct)
+    assert(dupes.isEmpty, s"query names defined twice: ${dupes.sorted.mkString(", ")}")
+    assert(SparkEntry.queries.size == names.size)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 }
