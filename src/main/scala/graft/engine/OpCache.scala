@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * suites do so after every query. `release` frees localCheckpoint blocks
   * too, so frames derived from a released operator result cannot be
   * re-executed afterwards — release is "I am done with this result", not a
-  * cache hint. PlanSpec's full-surface sweep asserts the block manager is
-  * empty after each SparkEntry query + release.
+  * cache hint. CacheSpec asserts the block manager is empty after each
+  * SparkEntry query + release.
   *
   * Registration is per-SparkSession and thread-safe, and
   * [[checkpointWithHandle]] derives its free handle from the checkpointed

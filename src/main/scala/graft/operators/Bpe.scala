@@ -73,8 +73,8 @@ object Bpe {
     // unpersist() only clears CacheManager entries, while localCheckpoint
     // persists an INTERNAL RDD the Dataset API offers no release for —
     // the bare form leaked one vocab-sized RDD per merge round on every
-    // cold training (caught by the full-surface leak sweep the first time
-    // a fresh environment trained the published table inside the suite)
+    // cold training (caught by CacheSpec the first time a fresh
+    // environment trained the published table inside the suite)
     var (words, freeWords) = OpCache.checkpointWithHandle(
       corpusWords(docs)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
