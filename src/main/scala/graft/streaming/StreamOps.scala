@@ -311,29 +311,19 @@ object StreamOps {
       buckets: Int = 64,
       targetLang: String = "en"): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.{Curation, TextAnalysis}
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        val toks = TextAnalysis.tokens(col("text"))
-        batch
-          .select(col("doc_id"),
-            (TextAnalysis.langPredOf(toks) === targetLang).cast("int")
-              .as("label"),
-            size(toks).cast("long").as("n_grams"),
-            Curation.classifierMarginExpr(toks, weights, buckets).as("z"))
-          .where(col("n_grams") > 0)
-          .select(col("doc_id"), col("label"), col("n_grams"),
-            graft.functions.OracleRound.roundN(col("z"), 6).as("margin"),
-            (col("z") >= 0.0).as("predicted"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(docs, stateDir, checkpointDir) { batch =>
+      val toks = TextAnalysis.tokens(col("text"))
+      batch
+        .select(col("doc_id"),
+          (TextAnalysis.langPredOf(toks) === targetLang).cast("int")
+            .as("label"),
+          size(toks).cast("long").as("n_grams"),
+          Curation.classifierMarginExpr(toks, weights, buckets).as("z"))
+        .where(col("n_grams") > 0)
+        .select(col("doc_id"), col("label"), col("n_grams"),
+          graft.functions.OracleRound.roundN(col("z"), 6).as("margin"),
+          (col("z") >= 0.0).as("predicted"))
+    }
   }
 
   /** The accumulated classifier-score store (one row per doc_id — an
@@ -343,7 +333,7 @@ object StreamOps {
   def readClassifierScores(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch).drop("batch_id")
+    StateTable.read(spark, stateDir, asOfBatch).drop("batch_id")
       .dropDuplicates("doc_id")
 
   /** Continuous corpus ingestion with incremental dedup — the foreachBatch
@@ -374,19 +364,16 @@ object StreamOps {
       checkpointDir: String,
       threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.{Dedup, TextAnalysis}
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // same fresh-checkpoint clobber hazard as the stats/CDC sinks —
-        // and here batch ids restarting at 0 would ALSO empty the
-        // cross-corpus dedup reference (batch_id < 0 matches nothing)
-        guardBatchContinuation(s, corpusDir, batchId)
-        // scoped, not session-global release: a shared session may have
-        // concurrent operator users (another stream, a batch job) whose
-        // caches a global release would free from under them
-        graft.engine.OpCache.scoped(s) {
+    StateTable.foreachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // same fresh-checkpoint clobber hazard as the stats/CDC sinks —
+      // and here batch ids restarting at 0 would ALSO empty the
+      // cross-corpus dedup reference (batch_id < 0 matches nothing)
+      StateTable.guardBatchContinuation(s, corpusDir, batchId)
+      // scoped, not session-global release: a shared session may have
+      // concurrent operator users (another stream, a batch job) whose
+      // caches a global release would free from under them
+      graft.engine.OpCache.scoped(s) {
         val withFp = batch
           .withColumn("fp_exact", md5(TextAnalysis.normalize(col("text"))))
         val keepIds = withFp.groupBy(col("fp_exact"))
@@ -442,17 +429,13 @@ object StreamOps {
         val corpusDups = Dedup.crossCorpusPairs(
             afterInBatch.select("doc_id", "text"), existing, threshold = threshold)
           .select(col("new_id").as("doc_id")).distinct()
-        val survivors = afterInBatch.join(corpusDups, Seq("doc_id"), "left_anti")
-        survivors.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
+        StateTable.land(
+          afterInBatch.join(corpusDups, Seq("doc_id"), "left_anti"),
+          corpusDir, batchId)
         // the jaccard operators' internal materializations registered into
         // this thread's scope — freed as the scoped block exits
-        }
       }
-      .start()
+    }
   }
 
   /** Streaming side of [[graft.operators.Incremental]]'s mergeable
@@ -474,19 +457,8 @@ object StreamOps {
       checkpointDir: String,
       groupCol: String = "source",
       valueCol: String = "n_chars"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.operators.Incremental.statsPartial(batch, groupCol, valueCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(docs, stateDir, checkpointDir)(
+      graft.operators.Incremental.statsPartial(_, groupCol, valueCol))
 
   /** Streaming rate-anomaly detector: watermarked tumbling-window event
     * counts, each CLOSED window scored against the RUNNING per-type count
@@ -521,48 +493,50 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n"))
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        guardBatchContinuation(s, stateDir, batchId)
-        guardBatchContinuation(s, outDir, batchId)
-        val scored = maxBatchId(s, stateDir) match {
-          case Some(_) =>
-            val priors = graft.operators.Incremental.finalizeStats(
-              graft.operators.Incremental.mergeAllStats(
-                readStateTable(s, stateDir, upToBatch = batchId - 1)))
-              .select(col("event_type"), col("val_mean").as("mean_prev"),
-                col("val_std").as("std_prev"))
-            val z = (col("n") - col("mean_prev")) / col("std_prev")
-            batch.join(priors, Seq("event_type"), "left")
-              .select(col("window_start"), col("event_type"), col("n"),
-                col("mean_prev"),
-                when(col("std_prev") > 0,
-                  graft.functions.OracleRound.roundN(z, 4)).as("z"),
-                coalesce(col("std_prev") > 0 &&
-                  abs(z) > lit(zThreshold), lit(false)).as("anomalous"))
-          case None =>
-            batch.select(col("window_start"), col("event_type"), col("n"),
-              lit(null).cast("double").as("mean_prev"),
-              lit(null).cast("double").as("z"),
-              lit(false).as("anomalous"))
-        }
-        scored.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        graft.operators.Incremental
-          .statsPartial(batch, "event_type", "n")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
+    StateTable.foreachBatch(counts, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // guard BOTH tables before writing either; the stats table's
+      // listing also tells whether any priors exist
+      val statsMax = StateTable.guardBatchContinuation(s, stateDir, batchId)
+      StateTable.guardBatchContinuation(s, outDir, batchId)
+      val scored = statsMax match {
+        case Some(_) =>
+          val priors = graft.operators.Incremental.finalizeStats(
+            mergeStats(StateTable.read(s, stateDir, upToBatch = batchId - 1)))
+            .select(col("event_type"), col("val_mean").as("mean_prev"),
+              col("val_std").as("std_prev"))
+          val z = (col("n") - col("mean_prev")) / col("std_prev")
+          batch.join(priors, Seq("event_type"), "left")
+            .select(col("window_start"), col("event_type"), col("n"),
+              col("mean_prev"),
+              when(col("std_prev") > 0,
+                graft.functions.OracleRound.roundN(z, 4)).as("z"),
+              coalesce(col("std_prev") > 0 &&
+                abs(z) > lit(zThreshold), lit(false)).as("anomalous"))
+        case None =>
+          batch.select(col("window_start"), col("event_type"), col("n"),
+            lit(null).cast("double").as("mean_prev"),
+            lit(null).cast("double").as("z"),
+            lit(false).as("anomalous"))
       }
-      .start()
+      StateTable.land(scored, outDir, batchId)
+      StateTable.land(
+        graft.operators.Incremental.statsPartial(batch, "event_type", "n"),
+        stateDir, batchId)
+    }
+  }
+
+  /** The stats store's merge: fold the partials per group, after
+    * restoring the (group, state...) column layout — parquet round-trips
+    * do not guarantee the group column stays first, and `mergeAllStats`
+    * keys off the first column.
+    */
+  private def mergeStats(state: DataFrame): DataFrame = {
+    val stateCols = Seq("n_rows", "val_sum", "val_sumsq", "val_min", "val_max")
+    val s = state.drop("batch_id")
+    graft.operators.Incremental.mergeAllStats(
+      s.select(s.columns.filterNot(stateCols.toSet).map(col) ++
+        stateCols.map(col): _*))
   }
 
   /** Merge-on-read view of an [[incrementalStatsSink]] state table: fold
@@ -571,36 +545,11 @@ object StreamOps {
     * aggregate — IncrementalSpec asserts the algebra, the streaming
     * golden asserts it across micro-batches and a checkpoint restart.
     */
-  /** Read a state table and restore the (group, state...) column layout —
-    * parquet round-trips do not guarantee the group column stays first,
-    * and `mergeAllStats` keys off the first column. `sinceBatch`/`upToBatch`
-    * bound the batch_id partitions read (exclusive / inclusive); a
-    * compacted table has no batch_id column and must be read unbounded.
-    */
-  private def readStateTable(
-      spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      sinceBatch: Long = Long.MinValue,
-      upToBatch: Long = Long.MaxValue): DataFrame = {
-    val stateCols = Seq("n_rows", "val_sum", "val_sumsq", "val_min", "val_max")
-    val raw = spark.read.parquet(stateDir)
-    val bounded =
-      if (sinceBatch == Long.MinValue && upToBatch == Long.MaxValue) raw
-      else raw.where(col("batch_id") > sinceBatch &&
-        col("batch_id") <= upToBatch)
-    val state = bounded.drop("batch_id")
-    state.select(state.columns.filterNot(stateCols.toSet).map(col) ++
-      stateCols.map(col): _*)
-  }
-
   def readRunningStats(
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      asOfBatch: Option[Long] = None): DataFrame = {
-    asOfBatch.foreach(requireAsOfCoverage(spark, stateDir, _))
+      asOfBatch: Option[Long] = None): DataFrame =
     graft.operators.Incremental.finalizeStats(
-      graft.operators.Incremental.mergeAllStats(
-        readStateTable(spark, stateDir,
-          upToBatch = asOfBatch.getOrElse(Long.MaxValue))))
-  }
+      mergeStats(StateTable.read(spark, stateDir, asOfBatch)))
 
   /** Merge-on-read over a compacted table PLUS the live batches it does
     * not cover: the compacted rows stand in for every batch_id ≤ the
@@ -621,19 +570,13 @@ object StreamOps {
     */
   def readRunningStats(
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      compactedDir: String, asOfBatch: Option[Long]): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    asOfBatch match {
-      case Some(n) if n < through =>
-        readRunningStats(spark, stateDir, asOfBatch = Some(n))
-      case n =>
-        graft.operators.Incremental.finalizeStats(
-          graft.operators.Incremental.mergeAllStats(
-            readStateTable(spark, stateDir, sinceBatch = through,
-                upToBatch = n.getOrElse(Long.MaxValue))
-              .unionByName(readStateTable(spark, compactedDir))))
-    }
-  }
+      compactedDir: String, asOfBatch: Option[Long]): DataFrame =
+    if (asOfBatch.exists(_ < StateTable.readCompactedThrough(spark, compactedDir)))
+      readRunningStats(spark, stateDir, asOfBatch)
+    else
+      graft.operators.Incremental.finalizeStats(mergeStats(
+        StateTable.readCompacted(spark, compactedDir, stateDir,
+          upToBatch = asOfBatch.getOrElse(Long.MaxValue))))
 
   def readRunningStats(
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
@@ -656,172 +599,34 @@ object StreamOps {
       constraints: Seq[graft.operators.Quality.Constraint],
       reportDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, reportDir, batchId)
-        graft.operators.Quality.checkConstraints(batch, constraints)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(reportDir)
-      }
-      .start()
+    StateTable.sink(rows, reportDir, checkpointDir)(
+      graft.operators.Quality.checkConstraints(_, constraints))
 
   /** Fold an [[incrementalStatsSink]] state table's accumulated batch
     * partitions into one state row per group, published to a NEW
-    * directory — the compaction the merge's associativity licenses.
-    * Readers move to `outDir` when they choose; the live sink keeps
-    * appending to `stateDir` untouched, so compaction never races the
-    * stream (the alternative — rewriting `stateDir` in place — has an
-    * unfixable window where a crash leaves both the folded partitions
-    * and their compacted sum double-counting). A compacted table is
-    * itself a valid state table: [[readRunningStats]] reads either.
+    * directory — the compaction the merge's associativity licenses
+    * ([[StateTable.compact]]: never in place, coverage pinned in the
+    * sidecar). Readers move to `outDir` when they choose. A compacted
+    * table is itself a valid state table: [[readRunningStats]] reads
+    * either.
     */
   def compactStats(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
-      outDir: String): Unit = {
-    // pin the fold's coverage BEFORE reading: the live sink may land a new
-    // batch mid-compaction, and a partition folded without being recorded
-    // in the watermark would double-count through the combined reader
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    graft.operators.Incremental.mergeAllStats(
-        readStateTable(spark, stateDir, upToBatch = through))
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergeStats)
 
-  // ── state-table lifecycle: watermark sidecar, continuation guard,
-  //    retention ─────────────────────────────────────────────────────────
-
-  /** Sidecar inside a compacted table recording the highest batch_id it
-    * folded. Leading `_` keeps it out of parquet file listings (the
-    * [[graft.engine.PublishGuard.SidecarFile]] convention).
-    */
-  private[graft] val CompactedThroughFile = "_GRAFT_COMPACTED_THROUGH"
-
-  private def hadoopFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeCompactedThrough(
-      spark: SparkSession, dir: String, through: Long): Unit = {
-    val (fs, p) = hadoopFs(spark, dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, CompactedThroughFile), true)
-    try out.write(s"$through\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The compacted table's coverage watermark — loud when absent, because
-    * every consumer (combined readers, [[vacuumStateTable]]) uses it to
-    * decide which live partitions still matter; guessing would either
-    * double-count or delete uncovered data.
-    */
-  private[graft] def readCompactedThrough(
-      spark: SparkSession, dir: String): Long = {
-    val (fs, p) = hadoopFs(spark, dir)
-    val f = new org.apache.hadoop.fs.Path(p, CompactedThroughFile)
-    if (!fs.exists(f))
-      throw new IllegalStateException(
-        s"$dir has no $CompactedThroughFile sidecar — not a compacted " +
-          "state table (or written by a pre-compaction version); refusing " +
-          "to guess its batch coverage")
-    val in = fs.open(f)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.trim.toLong
-  }
-
-  /** batch_id partition ids present under a state table dir, from one FS
-    * listing — no parquet footers touched.
-    */
-  private def batchIds(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val (fs, p) = hadoopFs(spark, stateDir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-  }
-
-  private def maxBatchId(spark: SparkSession, stateDir: String): Option[Long] = {
-    val ids = batchIds(spark, stateDir)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
-
-  /** Guard for snapshot-as-of reads over LIVE batch partitions: the whole
-    * prefix of batches up to `asOf` must still be present. Vacuum only
-    * ever retires a PREFIX (ids ≤ its cutoff), so a surviving minimum
-    * above 0 means history below it is gone and an as-of read there
-    * would silently undercount — refuse loudly instead. A gap ABOVE the
-    * surviving minimum is an empty micro-batch (sinks land no partition
-    * for an empty batch) and is fine. Conservative by design: an empty
-    * batch 0 is indistinguishable from a vacuumed one in the listing, so
-    * it refuses that case too rather than guess.
-    */
-  private def requireAsOfCoverage(
-      spark: SparkSession, stateDir: String, asOf: Long): Unit = {
-    require(asOf >= 0, s"asOfBatch must be >= 0, got $asOf")
-    val ids = batchIds(spark, stateDir)
-    if (ids.isEmpty || ids.min > 0)
-      throw new IllegalStateException(
-        s"$stateDir cannot serve an as-of-batch=$asOf read: the batch " +
-          s"prefix below ${if (ids.isEmpty) "any surviving partition"
-            else s"batch_id=${ids.min}"} has been vacuumed (or never " +
-          "landed) — read through a compacted snapshot whose watermark " +
-          "is ≤ the requested batch, or retain more live history")
-  }
-
-  /** Fail a foreachBatch body whose batch id runs BEHIND the state table:
-    * that only happens when a sink was restarted with a FRESH checkpoint
-    * against an existing table, restarting batch ids at 0 — the dynamic
-    * partition overwrite would then silently clobber historical
-    * partitions with unrelated data. (A same-checkpoint replay targets
-    * only the LAST, possibly-uncommitted batch, so `max == batchId` is
-    * legitimate and idempotent; `max > batchId` never is.)
-    */
-  private def guardBatchContinuation(
-      spark: SparkSession, stateDir: String, batchId: Long): Unit =
-    maxBatchId(spark, stateDir).foreach { mx =>
-      if (mx > batchId)
-        throw new IllegalStateException(
-          s"state table $stateDir already holds batch_id=$mx but this " +
-            s"query is at batch $batchId — it was started with a fresh " +
-            "checkpoint against an existing state table. Reuse the " +
-            "original checkpoint dir, or point the sink at a new table.")
-    }
-
-  /** Retire live batch partitions a compacted table supersedes, keeping
-    * the newest `keepLast` for replay headroom. Deletes exactly the
-    * partitions with batch_id ≤ min(compacted watermark, max − keepLast):
-    * the combined readers filter to batch_id > watermark, so nothing they
-    * consult is ever removed — results are identical before and after —
-    * and a replayed (at-least-once) vacuumed batch merely recreates a
-    * partition below the watermark that those readers keep ignoring.
-    * Returns the number of partitions removed. Without periodic vacuum a
-    * long-running sink regrows the unbounded small-file accumulation that
-    * compaction exists to fold.
+  /** Retire the live batch partitions a compacted table supersedes,
+    * keeping the newest `keepLast` ([[StateTable.vacuum]]); returns the
+    * number of partitions removed. Every combined reader gives the same
+    * result before and after.
     */
   def vacuumStateTable(
       spark: SparkSession,
       stateDir: String,
       compactedDir: String,
-      keepLast: Int = 2): Long = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val through = readCompactedThrough(spark, compactedDir)
-    val ids = batchIds(spark, stateDir)
-    if (ids.isEmpty) return 0L
-    val cutoff = math.min(through, ids.max - keepLast)
-    val doomed = ids.filter(_ <= cutoff)
-    val (fs, p) = hadoopFs(spark, stateDir)
-    doomed.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_id=$id"), true)
-    }
-    doomed.size.toLong
-  }
+      keepLast: Int = 2): Long =
+    StateTable.vacuum(spark, stateDir, compactedDir, keepLast)
 
   // ── CDC: streaming changeset apply (merge-on-read) ─────────────────────
 
@@ -849,25 +654,14 @@ object StreamOps {
       keyCol: String,
       seqCol: String = "seq",
       opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        guardBatchContinuation(s, changesDir, batchId)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
-        batch
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1)
-          .drop("__rn")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(changesDir)
-      }
-      .start()
+    StateTable.sink(changes, changesDir, checkpointDir) { batch =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
+      batch
+        .withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1)
+        .drop("__rn")
+    }
 
   /** Merge-on-read view of a [[cdcApplySink]] changes table over a base
     * snapshot: one key-partitioned window (never a global sort) picks the
@@ -893,13 +687,17 @@ object StreamOps {
       opCol: String = "op",
       sinceBatch: Long = Long.MinValue,
       upToBatch: Long = Long.MaxValue,
-      asOfBatch: Option[Long] = None): DataFrame = {
-    asOfBatch.foreach(requireAsOfCoverage(spark, changesDir, _))
-    val upTo = asOfBatch.fold(upToBatch)(math.min(_, upToBatch))
+      asOfBatch: Option[Long] = None): DataFrame =
+    mergeCdc(base,
+      StateTable.read(spark, changesDir, asOfBatch, sinceBatch, upToBatch),
+      keyCol, seqCol, opCol)
+
+  /** The CDC store's merge: `base` rows overlaid by `state`'s change rows. */
+  private def mergeCdc(
+      base: DataFrame, state: DataFrame,
+      keyCol: String, seqCol: String, opCol: String): DataFrame = {
     val payload = base.columns.filterNot(_ == keyCol)
-    val changes = spark.read.parquet(changesDir)
-      .where(col("batch_id") > sinceBatch && col("batch_id") <= upTo)
-      .drop("batch_id")
+    val changes = state.drop("batch_id")
     val seqType = changes.schema(seqCol).dataType
     val all = changes
       .withColumn("__chg", lit(1))
@@ -931,14 +729,9 @@ object StreamOps {
       outDir: String,
       keyCol: String,
       seqCol: String = "seq",
-      opCol: String = "op"): Unit = {
-    val through = maxBatchId(spark, changesDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $changesDir"))
-    readCdcTable(spark, base, changesDir, keyCol, seqCol, opCol,
-        upToBatch = through)
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      opCol: String = "op"): Unit =
+    StateTable.compact(spark, changesDir, outDir)(
+      mergeCdc(base, _, keyCol, seqCol, opCol))
 
   /** Current CDC table from a compacted snapshot plus the live batches
     * above its watermark — identical to [[readCdcTable]] over the original
@@ -962,7 +755,7 @@ object StreamOps {
       seqCol: String = "seq",
       opCol: String = "op",
       asOfBatch: Option[Long] = None): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
+    val through = StateTable.readCompactedThrough(spark, compactedDir)
     asOfBatch.filter(_ < through).foreach { n =>
       throw new IllegalStateException(
         s"compacted snapshot at $compactedDir already folds change " +
@@ -1496,21 +1289,10 @@ object StreamOps {
       gapMs: Long = 30 * 60 * 1000L,
       watermark: String = "30 minutes",
       maxLen: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    sessionPaths(events.sparkSession, events, gapMs, watermark, maxLen)
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        batch.groupBy(col("path")).agg(count(lit(1)).as("n_sessions"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(
+        sessionPaths(events.sparkSession, events, gapMs, watermark, maxLen).toDF(),
+        stateDir, checkpointDir)(
+      _.groupBy(col("path")).agg(count(lit(1)).as("n_sessions")))
 
   /** Whole-history top paths, merged on read: per-path counts sum across
     * the batch partitions (additive monoid), ranked (sessions desc, path
@@ -1521,7 +1303,7 @@ object StreamOps {
   def readTopPaths(
       spark: SparkSession, stateDir: String, k: Int = 20,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch)
+    StateTable.read(spark, stateDir, asOfBatch)
       .groupBy(col("path"))
       .agg(sum(col("n_sessions")).as("n_sessions"))
       .orderBy(col("n_sessions").desc, col("path"))
@@ -1547,36 +1329,14 @@ object StreamOps {
       checkpointDir: String,
       depth: Int = 3,
       width: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.functions.GraftFunctions.register(batch.sparkSession)
-        batch
-          .select(explode(
-            graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
-          .where(length(col("term")) > 0)
-          .select(expr(s"graft_cms(term, $depth, $width)").as("counters"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
-
-  /** Bound a state table to batches ≤ `asOfBatch` (with the vacuum
-    * coverage guard) — the shared snapshot-as-of entry for the sketch
-    * readers below; `None` reads current state untouched.
-    */
-  private def stateAsOf(
-      spark: SparkSession, stateDir: String,
-      asOfBatch: Option[Long]): DataFrame = {
-    asOfBatch.foreach(requireAsOfCoverage(spark, stateDir, _))
-    val raw = spark.read.parquet(stateDir)
-    asOfBatch.fold(raw)(n => raw.where(col("batch_id") <= n))
-  }
+    StateTable.sink(docs, stateDir, checkpointDir) { batch =>
+      graft.functions.GraftFunctions.register(batch.sparkSession)
+      batch
+        .select(explode(
+          graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
+        .where(length(col("term")) > 0)
+        .select(expr(s"graft_cms(term, $depth, $width)").as("counters"))
+    }
 
   /** Merge-on-read for [[cmsSink]]'s state: element-wise sum across the
     * batch rows — depth×width result rows, a bounded frame whatever the
@@ -1587,7 +1347,7 @@ object StreamOps {
   def readCmsCounters(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): Array[Long] =
-    stateAsOf(spark, stateDir, asOfBatch)
+    StateTable.read(spark, stateDir, asOfBatch)
       .select(posexplode(col("counters")).as(Seq("i", "c")))
       .groupBy(col("i")).agg(sum(col("c")).as("c"))
       .orderBy(col("i"))
@@ -1618,42 +1378,35 @@ object StreamOps {
       docs: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        batch
-          .select(col("doc_id"), explode(
-            graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-          .groupBy(col("term"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-            collect_list(struct(col("doc_id"), col("tf"))).as("postings"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(docs, stateDir, checkpointDir)(
+      _.select(col("doc_id"), explode(
+          graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
+        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+        .groupBy(col("term"))
+        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
+          collect_list(struct(col("doc_id"), col("tf"))).as("postings")))
 
-  /** The shared postings merge: per term, df/cf sums plus the flattened
-    * postings arrays, then the batch operator's exact read contract
-    * (minDf floor, doc-sorted head truncated to maxPostings, `doc:tf`
-    * serialization) — so merged-index == rebuilt-index is a column-level
-    * identity, not an approximation.
+  /** The inverted-index store's merge: per term, df/cf sums plus the
+    * flattened postings arrays — one row per term with FULL postings.
     */
-  private def mergeInvertedIndex(
-      state: DataFrame, minDf: Long, maxPostings: Int): DataFrame =
+  private def mergePostings(state: DataFrame): DataFrame =
     state
       .groupBy(col("term"))
       .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"),
-        flatten(collect_list(col("postings"))).as("plist"))
+        flatten(collect_list(col("postings"))).as("postings"))
+
+  /** The batch operator's exact read contract over merged postings (minDf
+    * floor, doc-sorted head truncated to maxPostings, `doc:tf`
+    * serialization) — so merged-index == rebuilt-index is a column-level
+    * identity, not an approximation.
+    */
+  private def servePostings(
+      merged: DataFrame, minDf: Long, maxPostings: Int): DataFrame =
+    merged
       .where(col("df") >= minDf)
       .select(col("term"), col("df"), col("cf"),
         concat_ws(",", transform(
-          slice(sort_array(col("plist")), 1, maxPostings),
+          slice(sort_array(col("postings")), 1, maxPostings),
           p => concat(p.getField("doc_id"), lit(":"), p.getField("tf"))))
           .as("postings"))
 
@@ -1667,8 +1420,7 @@ object StreamOps {
       spark: SparkSession, stateDir: String,
       minDf: Long = 2, maxPostings: Int = 20,
       asOfBatch: Option[Long] = None): DataFrame =
-    mergeInvertedIndex(
-      stateAsOf(spark, stateDir, asOfBatch).drop("batch_id"),
+    servePostings(mergePostings(StateTable.read(spark, stateDir, asOfBatch)),
       minDf, maxPostings)
 
   /** Fold the postings history into one row per term in a NEW directory
@@ -1679,17 +1431,8 @@ object StreamOps {
     * `maxPostings` remain exact.
     */
   def compactInvertedIndex(
-      spark: SparkSession, stateDir: String, outDir: String): Unit = {
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    spark.read.parquet(stateDir)
-      .where(col("batch_id") <= through)
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"),
-        flatten(collect_list(col("postings"))).as("postings"))
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      spark: SparkSession, stateDir: String, outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergePostings)
 
   /** Merged index from a compacted snapshot plus the live batches above
     * its watermark — identical to [[readInvertedIndex]] over the
@@ -1698,13 +1441,10 @@ object StreamOps {
     */
   def readInvertedIndexCompacted(
       spark: SparkSession, compactedDir: String, stateDir: String,
-      minDf: Long = 2, maxPostings: Int = 20): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    val live = spark.read.parquet(stateDir)
-      .where(col("batch_id") > through).drop("batch_id")
-    mergeInvertedIndex(
-      live.unionByName(spark.read.parquet(compactedDir)), minDf, maxPostings)
-  }
+      minDf: Long = 2, maxPostings: Int = 20): DataFrame =
+    servePostings(
+      mergePostings(StateTable.readCompacted(spark, compactedDir, stateDir)),
+      minDf, maxPostings)
 
   /** Streaming ANN index maintenance: each micro-batch of NEW embeddings
     * is assigned to its nearest published IVF centroid — a map-only pass,
@@ -1725,19 +1465,8 @@ object StreamOps {
       centroids: Array[Array[Double]],
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    embeddings.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.operators.Similarity.assignVectors(batch, centroids)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cluster")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(embeddings, stateDir, checkpointDir, Seq("cluster"))(
+      graft.operators.Similarity.assignVectors(_, centroids))
 
   /** The maintained inverted file, merged on read: (vec_id, cluster, v,
     * nrm) for the full ingested corpus — or, with `clusters`, ONLY the
@@ -1750,7 +1479,7 @@ object StreamOps {
       clusters: Seq[Int] = Nil,
       asOfBatch: Option[Long] = None): DataFrame = {
     requireIvfBatches(spark, stateDir)
-    val all = stateAsOf(spark, stateDir, asOfBatch).drop("batch_id")
+    val all = StateTable.read(spark, stateDir, asOfBatch).drop("batch_id")
     if (clusters.isEmpty) all
     else all.where(col("cluster").isin(clusters: _*))
   }
@@ -1759,19 +1488,18 @@ object StreamOps {
     * commit marker, no `batch_id=` partitions) is a COMMITTED BUT EMPTY
     * index — v1 before any ingest, or a rotation performed on an empty
     * index. A raw parquet read of it dies with an opaque schema-inference
-    * error; fail with the operational story instead.
+    * error; fail with the operational story instead. Returns the batch
+    * ids present.
     */
-  private def requireIvfBatches(spark: SparkSession, stateDir: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(dir) && fs.listStatus(dir)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (!hasBatches)
+  private def requireIvfBatches(spark: SparkSession, stateDir: String): Seq[Long] = {
+    val ids = StateTable.batchIds(spark, stateDir)
+    if (ids.isEmpty)
       throw new IllegalStateException(
         s"index state at $stateDir holds no ingested batch partitions — " +
           "the assign sink has not committed a batch yet (or the version " +
           "was rotated from an empty index); ingest first or read a " +
           "version that holds data")
+    ids
   }
 
   // ── centroid-version rotation for the maintained ANN index ──────────
@@ -1797,7 +1525,7 @@ object StreamOps {
   val IvfVersionMarker = "_GRAFT_VERSION_COMMITTED"
 
   /** The rebase partition id: below every real micro-batch, so
-    * [[guardBatchContinuation]] still catches fresh-checkpoint restarts
+    * [[StateTable.guardBatchContinuation]] still catches fresh-checkpoint restarts
     * (max(-1) never exceeds a real batch id) and as-of reads include the
     * rebase as the base snapshot.
     */
@@ -1883,23 +1611,16 @@ object StreamOps {
     val next = cur + 1
     val verDir = ivfVersionDir(indexRoot, next)
     val curDir = ivfVersionDir(indexRoot, cur)
-    val fs = new org.apache.hadoop.fs.Path(curDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(curDir))
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (hasData) {
+    if (StateTable.batchIds(spark, curDir).nonEmpty) {
       val corpus = readIvfAssignments(spark, curDir)
         .select(col("vec_id"), col("v").as("embedding"))
-      graft.operators.Similarity.assignVectors(corpus, newCentroids)
-        // carry at most one row per vector into the rebase (replay dups
-        // in the source version are value-identical); dedup AFTER the
-        // map-only assignment — its input must stay a scan-only frame
-        .dropDuplicates("vec_id")
-        .withColumn("batch_id", lit(IvfRebaseBatchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "cluster")
-        .parquet(verDir)
+      StateTable.land(
+        graft.operators.Similarity.assignVectors(corpus, newCentroids)
+          // carry at most one row per vector into the rebase (replay dups
+          // in the source version are value-identical); dedup AFTER the
+          // map-only assignment — its input must stay a scan-only frame
+          .dropDuplicates("vec_id"),
+        verDir, IvfRebaseBatchId, Seq("cluster"))
     }
     writeIvfVersionArtifacts(spark, verDir, newCentroids)
     next
@@ -1942,12 +1663,16 @@ object StreamOps {
       version: Option[Int] = None,
       sinceBatch: Long = 0L): DataFrame = {
     val v = version.getOrElse(currentIvfVersion(spark, indexRoot))
-    requireIvfBatches(spark, ivfVersionDir(indexRoot, v))
-    val state = spark.read.parquet(ivfVersionDir(indexRoot, v))
-    // partition discovery may infer batch_id as int — cast before the pull
-    val ids = state.select(col("batch_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted // bounded: one row per batch
+    // the batch_id= listing stands in for a distinct-batch_id row scan: a
+    // partition lands only for a batch with rows. The one row-less
+    // directory is a commit that crashed between creating `batch_id=N/`
+    // and renaming its first `cluster=` directory in. The sink replays N
+    // before landing any later batch, so N is the newest batch: it adds
+    // no rows to the current cohort, and it is the base only when it is
+    // the version's sole batch, where the parquet read fails either way
+    val ids = requireIvfBatches(spark, ivfVersionDir(indexRoot, v)).sorted
     require(ids.nonEmpty, s"version $v of $indexRoot holds no batches")
+    val state = spark.read.parquet(ivfVersionDir(indexRoot, v))
     val baseId = ids.head
     def cohort(cond: org.apache.spark.sql.Column) = state.where(cond)
       .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
@@ -1993,62 +1718,60 @@ object StreamOps {
       checkpointDir: String,
       numHashes: Int = 32,
       k: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.operators.Dedup.minhashSignatures(batch, numHashes, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(docs, stateDir, checkpointDir)(
+      graft.operators.Dedup.minhashSignatures(_, numHashes, k))
 
-  /** The accumulated signature store (doc_id, sig), deduplicated by
-    * doc_id — an at-least-once replay lands value-identical rows
-    * (signatures are a pure function of the text), so keeping either is
-    * exact. `asOfBatch` = the store as of batch N.
+  /** The signature stores' ownership rule (the minhash store and both
+    * hamming stores): each doc_id resolves to its EARLIEST occurrence,
+    * min (batch_id, sig) struct, kept as (doc_id, batch_id, sig). Replays
+    * land value-identical rows (signatures are a pure function of the
+    * content), and a doc_id redelivered in a LATER batch (source retry,
+    * not a same-batch replay) resolves deterministically — the doc is new
+    * exactly once, in the first batch that carried it — so whole-store
+    * and incremental reads agree on which batch owns each document. An
+    * arbitrary duplicate pick would let them double- or never-surface its
+    * pairs. On [[StateTable.readCompacted]] rows the snapshot ranks below
+    * every live batch, so compacted and live reads agree too, even if a
+    * redelivered doc_id carried a DIFFERENT sig.
+    */
+  private def signatureOwners(state: DataFrame): DataFrame =
+    state.groupBy(col("doc_id"))
+      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
+      .select(col("doc_id"),
+        col("m.batch_id").as("batch_id"), col("m.sig").as("sig"))
+
+  /** The signature stores' merge: one `(doc_id, sig)` row per document,
+    * by [[signatureOwners]].
+    */
+  private def mergeSignatures(state: DataFrame): DataFrame =
+    signatureOwners(state).drop("batch_id")
+
+  /** The accumulated signature store (doc_id, sig), one row per doc_id
+    * ([[signatureOwners]]). `asOfBatch` = the store as of batch N.
     */
   def readMinhashSignatures(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch).drop("batch_id")
-      .dropDuplicates("doc_id")
+    mergeSignatures(StateTable.read(spark, stateDir, asOfBatch))
 
   /** Fold the signature store's batch partitions into one compacted
-    * snapshot (distinct doc rows — the store's merge is set union, the
-    * simplest monoid) with the standard `through`-watermark sidecar:
-    * [[readMinhashSignaturesCompacted]] over (snapshot + batches above
-    * the watermark) equals [[readMinhashSignatures]] over the live
+    * snapshot (one row per doc) with the standard `through`-watermark
+    * sidecar: [[readMinhashSignaturesCompacted]] over (snapshot + batches
+    * above the watermark) equals [[readMinhashSignatures]] over the live
     * table, which licenses [[vacuumStateTable]] on the covered
     * partitions. Without periodic compaction a long-running sink grows
     * one partition per micro-batch forever.
     */
   def compactMinhashSignatures(
-      spark: SparkSession, stateDir: String, outDir: String): Unit = {
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    spark.read.parquet(stateDir)
-      .where(col("batch_id") <= through).drop("batch_id")
-      .dropDuplicates("doc_id")
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      spark: SparkSession, stateDir: String, outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergeSignatures)
 
   /** [[readMinhashSignatures]] through a compacted snapshot plus the
     * live batches above its watermark — the combined-reader contract.
     */
   def readMinhashSignaturesCompacted(
-      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    val live = spark.read.parquet(stateDir)
-      .where(col("batch_id") > through).drop("batch_id")
-    live.unionByName(spark.read.parquet(compactedDir))
-      .dropDuplicates("doc_id")
-  }
+      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame =
+    mergeSignatures(StateTable.readCompacted(spark, compactedDir, stateDir))
 
   /** Whole-store near-dup pairs, merged on read: band-bucket candidates +
     * signature-estimate threshold over the STORED signatures — the
@@ -2078,19 +1801,7 @@ object StreamOps {
       spark: SparkSession, stateDir: String, batchId: Long,
       numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    // a doc_id that landed in TWO different batch partitions (source
-    // redelivery in a later micro-batch, not a same-batch replay) must
-    // resolve deterministically, or whether it counts as "new" in this
-    // batch depends on which duplicate dropDuplicates happened to keep —
-    // and the per-batch incremental reads could double- or never-surface
-    // its pairs. Keep the EARLIEST occurrence (min (batch_id, sig)
-    // struct): the doc is new exactly once, in the first batch that
-    // carried it.
-    val upTo = stateAsOf(spark, stateDir, Some(batchId))
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
-      .select(col("doc_id"),
-        col("m.batch_id").as("batch_id"), col("m.sig").as("sig"))
+    val upTo = signatureOwners(StateTable.read(spark, stateDir, Some(batchId)))
     val newSigs = upTo.where(col("batch_id") === batchId).drop("batch_id")
     val allSigs = upTo.drop("batch_id")
     val bandedNew = graft.operators.Dedup
@@ -2108,20 +1819,6 @@ object StreamOps {
       cands, allSigs, numHashes, threshold)
   }
 
-  // ── streaming multimodal fingerprint maintenance ───────────────────
-  // The image/audio twin of the minhash near-dup maintenance above: the
-  // stored signature is one 56-bit hamming fingerprint per blob instead
-  // of a minhash array, and the pair machinery is the shared 7×8-bit
-  // banded join ([[graft.operators.Multimodal.bandedHammingPairs]]).
-
-  /** Shared sink body for the hamming-fingerprint stores: each
-    * micro-batch of NEW media blobs lands its `(doc_id, sig)` 56-bit
-    * signatures (a pure function of the payload, so an at-least-once
-    * replay lands value-identical rows) as a replay-idempotent
-    * `batch_id=N` partition. Per-batch work is O(batch); state is
-    * 8 bytes per blob — the raw media bytes are decoded exactly once,
-    * at ingest, and never re-read by any pair read below.
-    */
   /** Streaming canary / memorization audit — the continuous form of
     * [[graft.operators.Curation.canaryScan]]: every micro-batch of
     * arriving documents is scanned against the (request-sized, broadcast)
@@ -2143,77 +1840,52 @@ object StreamOps {
       stateDir: String,
       checkpointDir: String,
       k: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.operators.Curation.canaryScan(batch, canaries, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(docs, stateDir, checkpointDir)(
+      graft.operators.Curation.canaryScan(_, canaries, k))
+
+  /** The canary store's merge: one row per (canary_id, doc_id) — replays
+    * land value-identical rows (pos is a pure function of the text), so
+    * keeping either is exact.
+    */
+  private def mergeCanaryHits(state: DataFrame): DataFrame =
+    state.drop("batch_id").dropDuplicates("canary_id", "doc_id")
 
   /** The accumulated canary-hit store `(canary_id, doc_id, pos)`,
-    * deduplicated on (canary_id, doc_id) — replays land value-identical
-    * rows (pos is a pure function of the text), so keeping either is
-    * exact. `asOfBatch` = the audit as of batch N.
+    * deduplicated on (canary_id, doc_id). `asOfBatch` = the audit as of
+    * batch N.
     */
   def readCanaryHits(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch).drop("batch_id")
-      .dropDuplicates("canary_id", "doc_id")
+    mergeCanaryHits(StateTable.read(spark, stateDir, asOfBatch))
 
   /** Fold the canary-hit store's batch partitions into one compacted
     * snapshot with the standard `through`-watermark sidecar — the
     * [[compactMinhashSignatures]] contract (set-union monoid).
     */
   def compactCanaryHits(
-      spark: SparkSession, stateDir: String, outDir: String): Unit = {
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    spark.read.parquet(stateDir)
-      .where(col("batch_id") <= through).drop("batch_id")
-      .dropDuplicates("canary_id", "doc_id")
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      spark: SparkSession, stateDir: String, outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergeCanaryHits)
 
   /** [[readCanaryHits]] through a compacted snapshot plus the live
     * batches above its watermark — the combined-reader contract that
     * licenses [[vacuumStateTable]] on the covered partitions.
     */
   def readCanaryHitsCompacted(
-      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    val live = spark.read.parquet(stateDir)
-      .where(col("batch_id") > through).drop("batch_id")
-    live.unionByName(spark.read.parquet(compactedDir))
-      .dropDuplicates("canary_id", "doc_id")
-  }
+      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame =
+    mergeCanaryHits(StateTable.readCompacted(spark, compactedDir, stateDir))
 
-  private def hammingSigSink(
-      media: DataFrame,
-      stateDir: String,
-      checkpointDir: String,
-      sigOf: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        sigOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+  // ── streaming multimodal fingerprint maintenance ───────────────────
+  // The image/audio twin of the minhash near-dup maintenance above: the
+  // stored signature is one 56-bit hamming fingerprint per blob instead
+  // of a minhash array, and the pair machinery is the shared 7×8-bit
+  // banded join ([[graft.operators.Multimodal.bandedHammingPairs]]). Each
+  // micro-batch of NEW media blobs lands its `(doc_id, sig)` signatures
+  // (a pure function of the payload, so an at-least-once replay lands
+  // value-identical rows) as a replay-idempotent `batch_id=N` partition.
+  // Per-batch work is O(batch); state is 8 bytes per blob — the raw media
+  // bytes are decoded exactly once, at ingest, and never re-read by any
+  // pair read below.
 
   /** Streaming IMAGE near-dup maintenance: lands the 56-bit perceptual
     * hash of each arriving blob (REAL pixel decode —
@@ -2226,7 +1898,7 @@ object StreamOps {
       media: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    hammingSigSink(media, stateDir, checkpointDir, b =>
+    StateTable.sink(media, stateDir, checkpointDir)(b =>
       graft.operators.Multimodal.imagePerceptualHash(b.sparkSession, b)
         .select(col("doc_id"), col("phash").as("sig")))
 
@@ -2244,26 +1916,19 @@ object StreamOps {
       media: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    hammingSigSink(media, stateDir, checkpointDir, b =>
+    StateTable.sink(media, stateDir, checkpointDir)(b =>
       graft.operators.Multimodal.audioFingerprint(b.sparkSession, b)
         .select(col("doc_id"), col("afp").as("sig")))
 
-  /** The accumulated fingerprint store `(doc_id, sig)`. Signatures are
-    * a pure function of the payload, so duplicate rows from replays are
-    * value-identical and keeping either is exact; a doc_id REDELIVERED
-    * in a later batch resolves to its earliest occurrence (min
-    * (batch_id, sig) struct — the [[newMinhashPairsForBatch]]
-    * determinism rule), so whole-store and incremental reads agree on
-    * which batch owns each document. `asOfBatch` = the store as of
-    * batch N.
+  /** The accumulated fingerprint store `(doc_id, sig)`, one row per
+    * doc_id by the earliest-occurrence rule ([[signatureOwners]]), so
+    * whole-store and incremental reads agree on which batch owns each
+    * document. `asOfBatch` = the store as of batch N.
     */
   def readHammingSignatures(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
-      .select(col("doc_id"), col("m.sig").as("sig"))
+    mergeSignatures(StateTable.read(spark, stateDir, asOfBatch))
 
   /** Whole-store near-dup pairs, merged on read: the IDENTICAL banded
     * plan (and therefore the identical pair set) as the batch
@@ -2293,13 +1958,7 @@ object StreamOps {
   def newHammingPairsForBatch(
       spark: SparkSession, stateDir: String, batchId: Long,
       maxHamming: Int = 6): DataFrame = {
-    // same redelivery rule as newMinhashPairsForBatch: a doc_id landing
-    // in two batch partitions is "new" exactly once, in its first batch
-    val upTo = stateAsOf(spark, stateDir, Some(batchId))
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
-      .select(col("doc_id"),
-        col("m.batch_id").as("batch_id"), col("m.sig").as("sig"))
+    val upTo = signatureOwners(StateTable.read(spark, stateDir, Some(batchId)))
     val newSigs = upTo.where(col("batch_id") === batchId).drop("batch_id")
     val allSigs = upTo.drop("batch_id")
     graft.operators.Multimodal.bandedHammingPairsBetween(
@@ -2314,41 +1973,16 @@ object StreamOps {
     * [[vacuumStateTable]] on the covered partitions.
     */
   def compactHammingSignatures(
-      spark: SparkSession, stateDir: String, outDir: String): Unit = {
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    spark.read.parquet(stateDir)
-      .where(col("batch_id") <= through)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
-      .select(col("doc_id"), col("m.sig").as("sig"))
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      spark: SparkSession, stateDir: String, outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergeSignatures)
 
   /** [[readHammingSignatures]] through a compacted snapshot plus the
-    * live batches above its watermark — the combined-reader contract.
-    * Duplicate doc_ids resolve by the SAME deterministic
-    * min-(batch_id, sig) rule as the live reader, with the snapshot's
-    * batch-blind rows ranked as batch −1 (they fold batches ≤ the
-    * watermark, all below any live batch — so the combined reader and
-    * [[readHammingSignatures]] agree even if a redelivered doc_id ever
-    * carried a DIFFERENT sig, where an arbitrary dropDuplicates pick
-    * would diverge nondeterministically between the two readers).
+    * live batches above its watermark — the combined-reader contract,
+    * by the same [[signatureOwners]] rule as the live reader.
     */
   def readHammingSignaturesCompacted(
-      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    val live = spark.read.parquet(stateDir)
-      .where(col("batch_id") > through)
-      .select(col("doc_id"), col("batch_id"), col("sig"))
-    val snapshot = spark.read.parquet(compactedDir)
-      .select(col("doc_id"), lit(-1L).as("batch_id"), col("sig"))
-    live.unionByName(snapshot)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("batch_id"), col("sig"))).as("m"))
-      .select(col("doc_id"), col("m.sig").as("sig"))
-  }
+      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame =
+    mergeSignatures(StateTable.readCompacted(spark, compactedDir, stateDir))
 
   // ── streaming VIDEO frame-hash maintenance ─────────────────────────
   // The video twin of the hamming-fingerprint maintenance above: the
@@ -2371,43 +2005,35 @@ object StreamOps {
       media: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        graft.operators.Multimodal.videoFrameHashes(batch.sparkSession, batch)
-          .select(col("doc_id"), col("fhash")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(media, stateDir, checkpointDir)(b =>
+      graft.operators.Multimodal.videoFrameHashes(b.sparkSession, b)
+        .select(col("doc_id"), col("fhash")).distinct())
 
-  /** The accumulated frame-hash store, ownership-resolved: a doc_id
-    * REDELIVERED in a later batch resolves to its EARLIEST batch's rows
-    * (min batch_id per doc — the multi-row form of the hamming store's
-    * min-(batch_id, sig) rule; rows are value-identical across replays,
-    * ownership only fixes which batch the incremental read treats as
-    * "new"). `asOfBatch` = the store as of batch N.
+  /** The frame-hash store's ownership rule: a doc_id REDELIVERED in a
+    * later batch resolves to its EARLIEST batch's rows (min batch_id per
+    * doc — the multi-row form of [[signatureOwners]]; rows are
+    * value-identical across replays, ownership only fixes which batch
+    * the incremental read treats as "new"). Kept as
+    * (doc_id, batch_id, fhash).
+    */
+  private def ownedFrameHashes(state: DataFrame): DataFrame = {
+    val own = state.groupBy(col("doc_id"))
+      .agg(min(col("batch_id")).as("batch_id"))
+    state.join(own, Seq("doc_id", "batch_id"))
+      .select(col("doc_id"), col("batch_id"), col("fhash")).distinct()
+  }
+
+  /** The frame-hash store's merge: the owned `(doc_id, fhash)` rows. */
+  private def mergeFrameHashes(state: DataFrame): DataFrame =
+    ownedFrameHashes(state).select(col("doc_id"), col("fhash")).distinct()
+
+  /** The accumulated frame-hash store, ownership-resolved
+    * ([[ownedFrameHashes]]). `asOfBatch` = the store as of batch N.
     */
   def readVideoFrameHashes(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    ownedVideoFrameHashes(spark, stateDir, asOfBatch)
-      .select(col("doc_id"), col("fhash")).distinct()
-
-  private def ownedVideoFrameHashes(
-      spark: SparkSession, stateDir: String,
-      asOfBatch: Option[Long]): DataFrame = {
-    val upTo = stateAsOf(spark, stateDir, asOfBatch)
-    val own = upTo.groupBy(col("doc_id"))
-      .agg(min(col("batch_id")).as("batch_id"))
-    upTo.join(own, Seq("doc_id", "batch_id"))
-      .select(col("doc_id"), col("batch_id"), col("fhash")).distinct()
-  }
+    mergeFrameHashes(StateTable.read(spark, stateDir, asOfBatch))
 
   /** Whole-store video near-dup pairs, merged on read: the IDENTICAL
     * frame-overlap plan as the batch
@@ -2444,7 +2070,7 @@ object StreamOps {
   def newVideoPairsForBatch(
       spark: SparkSession, stateDir: String, batchId: Long,
       minShared: Int = 2): DataFrame = {
-    val rows = ownedVideoFrameHashes(spark, stateDir, Some(batchId))
+    val rows = ownedFrameHashes(StateTable.read(spark, stateDir, Some(batchId)))
     val newRows = rows.where(col("batch_id") === batchId).drop("batch_id")
     val allRows = rows.drop("batch_id")
     newRows.as("x").join(allRows.as("y"),
@@ -2462,32 +2088,19 @@ object StreamOps {
 
   /** Fold the frame-hash store's batch partitions into one compacted
     * snapshot with the standard `through`-watermark sidecar — the
-    * [[compactHammingSignatures]] contract for the multi-row store
-    * (rows are payload-pure, so batch-blind distinct is exact).
+    * [[compactHammingSignatures]] contract for the multi-row store.
     */
   def compactVideoFrameHashes(
-      spark: SparkSession, stateDir: String, outDir: String): Unit = {
-    val through = maxBatchId(spark, stateDir).getOrElse(throw
-      new IllegalStateException(s"no batch partitions to compact at $stateDir"))
-    spark.read.parquet(stateDir)
-      .where(col("batch_id") <= through)
-      .select(col("doc_id"), col("fhash")).distinct()
-      .write.mode("errorifexists").parquet(outDir)
-    writeCompactedThrough(spark, outDir, through)
-  }
+      spark: SparkSession, stateDir: String, outDir: String): Unit =
+    StateTable.compact(spark, stateDir, outDir)(mergeFrameHashes)
 
   /** [[readVideoFrameHashes]] through a compacted snapshot plus the
     * live batches above its watermark — the combined-reader contract
     * that licenses [[vacuumStateTable]] on the covered partitions.
     */
   def readVideoFrameHashesCompacted(
-      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame = {
-    val through = readCompactedThrough(spark, compactedDir)
-    val live = spark.read.parquet(stateDir)
-      .where(col("batch_id") > through)
-      .select(col("doc_id"), col("fhash"))
-    live.unionByName(spark.read.parquet(compactedDir)).distinct()
-  }
+      spark: SparkSession, compactedDir: String, stateDir: String): DataFrame =
+    mergeFrameHashes(StateTable.readCompacted(spark, compactedDir, stateDir))
 
   // ── serving straight off the fingerprint stores ────────────────────
   // Query-by-example against the continuously-maintained state tables:
@@ -2580,20 +2193,8 @@ object StreamOps {
       events: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        batch.groupBy(col("event_type"))
-          .agg(hll_sketch_agg(col("user_id")).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(events, stateDir, checkpointDir)(
+      _.groupBy(col("event_type")).agg(hll_sketch_agg(col("user_id")).as("sk")))
 
   /** Merge-on-read for [[hllSink]]: per event type, the union of all
     * batch sketches, estimated. Bounded work: (types × batches) rows in,
@@ -2604,7 +2205,7 @@ object StreamOps {
   def readDistinctUsers(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch)
+    StateTable.read(spark, stateDir, asOfBatch)
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("distinct_users"))
 
@@ -2627,23 +2228,11 @@ object StreamOps {
       lo: Double = 0.0,
       width: Double = 25.0,
       nBuckets: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        batch
-          .select(least(greatest(
-            floor((col("value") - lit(lo)) / lit(width)), lit(0L)),
-            lit(nBuckets - 1L)).cast("int").as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(events, stateDir, checkpointDir)(
+      _.select(least(greatest(
+          floor((col("value") - lit(lo)) / lit(width)), lit(0L)),
+          lit(nBuckets - 1L)).cast("int").as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("n")))
 
   /** Merge-on-read for [[histogramSink]]: per bucket, the count sum plus
     * the bucket's value edges. (buckets × batches) rows in, ≤ nBuckets
@@ -2653,7 +2242,7 @@ object StreamOps {
       spark: SparkSession, stateDir: String,
       lo: Double = 0.0, width: Double = 25.0,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch)
+    StateTable.read(spark, stateDir, asOfBatch)
       .groupBy(col("bucket")).agg(sum(col("n")).as("n"))
       .select(col("bucket"),
         (lit(lo) + col("bucket") * lit(width)).as("lo_edge"),
@@ -2709,20 +2298,9 @@ object StreamOps {
       events: DataFrame,
       stateDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardBatchContinuation(batch.sparkSession, stateDir, batchId)
-        batch.select(col("user_id"), to_date(col("ts")).as("day"))
-          .groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-      }
-      .start()
+    StateTable.sink(events, stateDir, checkpointDir)(
+      _.select(col("user_id"), to_date(col("ts")).as("day"))
+        .groupBy(col("user_id")).agg(min(col("day")).as("cohort_day")))
 
   /** Merge-on-read for [[cohortSink]]: the per-user min across batch
     * partials — (users × batches) rows in, users rows out. `asOfBatch`
@@ -2732,6 +2310,6 @@ object StreamOps {
   def readCohorts(
       spark: SparkSession, stateDir: String,
       asOfBatch: Option[Long] = None): DataFrame =
-    stateAsOf(spark, stateDir, asOfBatch)
+    StateTable.read(spark, stateDir, asOfBatch)
       .groupBy(col("user_id")).agg(min(col("cohort_day")).as("cohort_day"))
 }

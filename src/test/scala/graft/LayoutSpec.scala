@@ -144,6 +144,20 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
+  test("pipeline_bucketed_join's own frame plans with no exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val plan = graft.queries.CurationQueries.bucketedJoinFrame(spark, sf)
+      .queryExecution.executedPlan
+    // the helper's collect descends into the adaptive plan's current tree
+    val aqe = new AdaptiveSparkPlanHelper {}
+    assert(aqe.collect(plan) { case j: SortMergeJoinExec => j }.nonEmpty,
+      s"expected a SortMergeJoin:\n$plan")
+    assert(aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the bucketed join frame must not shuffle:\n$plan")
+  }
+
   test("mergeSchema read widens old-generation files with nulls, loses no rows") {
     import org.apache.spark.sql.functions._
     val docs = graft.engine.Tables.documents(spark, sf)

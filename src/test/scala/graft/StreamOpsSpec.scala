@@ -1716,6 +1716,57 @@ class StreamOpsSpec extends AnyFunSuite {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("fresh checkpoint")),
       s"expected the continuation-guard error, got: ${messages(e)}")
+    def refusesFresh(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      assert(messages(e).exists(_.contains("fresh checkpoint")),
+        s"expected the continuation-guard error, got: ${messages(e)}")
+    }
+    def batchDirs(table: String): Set[String] =
+      Option(new java.io.File(table).list()).toSet.flatten
+        .filter(_.startsWith("batch_id="))
+
+    // the (batch_id, cluster) layout: a refused batch leaves batch 0's
+    // cluster= directories as they were
+    val ivfSrc = java.nio.file.Files.createTempDirectory("graft-ivf-guard-src").toString
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
+    vecs.write.mode("overwrite").json(ivfSrc)
+    def ivfRun(chk: String): Unit = {
+      val q = StreamOps.ivfAssignSink(
+        spark.readStream.schema(vecs.schema).json(ivfSrc),
+        Array(Array(1.0, 0.0), Array(0.0, 1.0)), s"$dir/ivf", chk)
+      try q.processAllAvailable() finally q.stop()
+    }
+    ivfRun(s"$dir/ivf_chk")
+    Seq((3L, Seq(1.0, 0.1))).toDF("vec_id", "embedding").write.mode("append").json(ivfSrc)
+    ivfRun(s"$dir/ivf_chk")
+    def clusterDirs = new java.io.File(s"$dir/ivf/batch_id=0").list().toSet
+    val batch0 = clusterDirs
+    assert(batch0 === Set("cluster=0", "cluster=1"), s"batch 0 layout: $batch0")
+    assert(batchDirs(s"$dir/ivf") === Set("batch_id=0", "batch_id=1"))
+    refusesFresh(ivfRun(s"$dir/ivf_chk_fresh"))
+    assert(clusterDirs === batch0, "the refused batch rewrote batch 0")
+
+    // rateAnomalySink writes two tables: a fresh checkpoint is refused
+    // when EITHER one is ahead, and the other (new) table stays empty
+    val rateSrc = java.nio.file.Files.createTempDirectory("graft-rate-guard-src").toString
+    val clicks = (0 until 3).map(i => (i.toLong,
+      Timestamp.valueOf(f"2024-01-01 00:0$i%d:01"), 1L, "click", 0.0)) :+
+      ((9L, Timestamp.valueOf("2024-01-01 00:10:00"), 1L, "tick", 0.0))
+    val events = clicks.toDF("event_id", "ts", "user_id", "event_type", "value")
+    events.write.mode("overwrite").json(rateSrc)
+    def rateRun(state: String, out: String, chk: String): Unit = {
+      val q = StreamOps.rateAnomalySink(
+        spark.readStream.schema(events.schema).json(rateSrc),
+        s"$dir/$state", s"$dir/$out", s"$dir/$chk")
+      try q.processAllAvailable() finally q.stop()
+    }
+    rateRun("stats", "scored", "rate_chk")
+    assert(batchDirs(s"$dir/stats").nonEmpty && batchDirs(s"$dir/scored").nonEmpty,
+      "the first run closed no windows")
+    refusesFresh(rateRun("stats_new", "scored", "rate_chk_a"))
+    assert(batchDirs(s"$dir/stats_new").isEmpty, "stats table written before the refusal")
+    refusesFresh(rateRun("stats", "scored_new", "rate_chk_b"))
+    assert(batchDirs(s"$dir/scored_new").isEmpty, "scored table written before the refusal")
   }
 
   test("stats-table vacuum bounds files and preserves the combined reader") {
@@ -2174,5 +2225,29 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(toSet(StreamOps.readCanaryHitsCompacted(
       spark, s"$dir/compact", s"$dir/state")) === stored,
       "combined reader diverged after vacuum")
+  }
+
+  test("StateTable is the only writer of batch partitions and compaction sidecars") {
+    val allowed = "src/main/scala/graft/streaming/StateTable.scala"
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    // the scan must see the code it guards
+    assert(files.exists(_.getPath == allowed))
+    assert(files.exists(_.getPath == "src/main/scala/graft/streaming/StreamOps.scala"))
+    val offenders = files.filterNot(_.getPath == allowed).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try {
+        val text = src.mkString
+        text.contains("partitionOverwriteMode") || text.contains("CompactedThroughFile")
+      } finally src.close()
+    }.map(_.getPath)
+    assert(offenders.isEmpty,
+      "land, compact and read state tables through StateTable instead: " +
+        offenders.sorted.mkString(", "))
   }
 }
