@@ -1838,21 +1838,10 @@ object Graph {
     */
   def embeddingNeighbors(
       emb: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val n = emb.select(col("node"), col("vec"),
-      VectorOps.l2Norm(col("vec")).as("nrm"))
-    val q = n.join(queries, Seq("node"), "left_semi")
-      .select(col("node").as("query"), col("vec").as("qv"),
-        col("nrm").as("qn"))
-    val scored = n.join(broadcast(q), col("node") =!= col("query"))
-      .select(col("query"), col("node"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("vec")),
-          col("qn"), col("nrm")).as("cosine"))
-    val w = Window.partitionBy(col("query"))
-      .orderBy(col("cosine").desc, col("node"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query"), col("rank"), col("node"), col("cosine"))
+    val n = normed(emb)
+    Similarity.cosineTopK(
+      n.join(broadcast(querySide(n, queries)), col("node") =!= col("query")),
+      k, NodeColumns)
   }
 
   /** IVF-pruned top-k neighbors over the published `(node, vec)` table —
@@ -1891,13 +1880,10 @@ object Graph {
       baseDir: String, slug: String,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
       iters: Int = 3): DataFrame = {
-    val ivf = embeddingNeighborsIvfPruned(
-      emb, queries, baseDir, slug, k, nlist, nprobe, iters)
-    val exact = embeddingNeighbors(emb, queries, k)
-      .select(col("query"), col("node"), lit(true).as("in_exact"))
-    ivf.join(exact, Seq("query", "node"), "left")
-      .select(col("query"), col("rank"), col("node"), col("cosine"),
-        coalesce(col("in_exact"), lit(false)).as("in_exact"))
+    withInExact(
+      embeddingNeighborsIvfPruned(
+        emb, queries, baseDir, slug, k, nlist, nprobe, iters),
+      embeddingNeighbors(emb, queries, k))
   }
 
   /** The PRODUCTION spelling of [[embeddingNeighborsIvf]]: the pruned
@@ -1917,19 +1903,18 @@ object Graph {
       iters: Int = 3,
       broadcastQueries: Option[Boolean] = None,
       gprobe: Int = -1, ngroups: Int = 0): DataFrame = {
-    // the broadcast decision lives in ivfServingSides (size-gated; None =
-    // measure the cohort) — q arrives pre-hinted when it fits. gprobe is
-    // AUTO by default (Similarity.resolveGprobe): two-level selection
+    // broadcastQueries None = measure the cohort and broadcast it only
+    // under the cap (Similarity.ivfCandidates). gprobe is AUTO by default
+    // (Similarity.resolveGprobe): two-level selection
     // engages once nlist ≥ HierAutoNlist, so the scale path needs no
     // caller opt-in while oracle-scale defaults stay exact-selection
     // (bit-identical); 0 forces exact, > 0 explicit two-level
     val (cents, hier) = embeddingCentroidsAndGroups(
       emb, baseDir, slug, nlist, iters,
       Similarity.resolveGprobe(gprobe, nlist), ngroups)
-    val (n, q) = ivfServingSides(emb, queries, cents, nprobe, broadcastQueries, hier)
-    val cands = n.join(q, Seq("cluster"))
-      .where(col("node") =!= col("query"))
-    rankTopK(scoreCosine(cands), k)
+    Similarity.cosineTopK(
+      ivfCandidates(emb, queries, cents, nprobe, hier, broadcastQueries),
+      k, NodeColumns)
   }
 
   /** [[linkPredictionIvf]] without the honesty join — the production
@@ -1941,7 +1926,6 @@ object Graph {
       baseDir: String, slug: String,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 8,
       iters: Int = 3, sidePrefix: String = "s:",
-      broadcastQueries: Option[Boolean] = None,
       gprobe: Int = -1, ngroups: Int = 0): DataFrame = {
     // nprobe defaults to 8 here, not 4 (round-16 verdict item 4): the
     // every-user recommendation this spelling is named for measured
@@ -1952,13 +1936,9 @@ object Graph {
     val (cents, hier) = embeddingCentroidsAndGroups(
       emb, baseDir, slug, nlist, iters,
       Similarity.resolveGprobe(gprobe, nlist), ngroups)
-    val (n, q) = ivfServingSides(emb, queries, cents, nprobe, broadcastQueries, hier)
-    val cands = n.where(col("node").startsWith(sidePrefix))
-      .join(q, Seq("cluster"))
-      .where(col("node") =!= col("query"))
-      .join(edges.select(col("u").as("query"), col("v").as("node")),
-        Seq("query", "node"), "left_anti")
-    rankTopK(scoreCosine(cands), k)
+    val cands = ivfCandidates(emb, queries, cents, nprobe, hier, None,
+      Some(col("node").startsWith(sidePrefix)))
+    Similarity.cosineTopK(withoutEdges(cands, edges), k, NodeColumns)
   }
 
   /** [[linkPrediction]] on the IVF-pruned candidate set — the scaled
@@ -1978,38 +1958,33 @@ object Graph {
       baseDir: String, slug: String,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
       iters: Int = 3, sidePrefix: String = "s:"): DataFrame = {
-    val ivf = linkPredictionIvfPruned(
-      emb, edges, queries, baseDir, slug, k, nlist, nprobe, iters, sidePrefix)
-    val exact = linkPrediction(emb, edges, queries, k, sidePrefix)
-      .select(col("query"), col("node"), lit(true).as("in_exact"))
-    ivf.join(exact, Seq("query", "node"), "left")
+    withInExact(
+      linkPredictionIvfPruned(
+        emb, edges, queries, baseDir, slug, k, nlist, nprobe, iters, sidePrefix),
+      linkPrediction(emb, edges, queries, k, sidePrefix))
+  }
+
+  /** The honesty column of the `_ivf` spellings: each served IVF row
+    * carries `in_exact`, whether the same (query, node) pair is in the
+    * exact top-k.
+    */
+  private def withInExact(ivf: DataFrame, exact: DataFrame): DataFrame =
+    ivf.join(exact.select(col("query"), col("node"), lit(true).as("in_exact")),
+        Seq("query", "node"), "left")
       .select(col("query"), col("rank"), col("node"), col("cosine"),
         coalesce(col("in_exact"), lit(false)).as("in_exact"))
-  }
 
-  /** Published IVF centroids over a `(node, vec)` table — the rank-keyed
-    * view exists for TRAINING only (deterministic k-means init needs the
-    * first nlist vectors of a total order); node-sized shuffle with a
-    * lineage cut, blocks freed as soon as the (driver-bounded) centroid
-    * values are in hand. Steady state pays one node-sized fingerprint
-    * scan; training runs once per publish.
-    */
-  private def embeddingCentroids(
-      emb: DataFrame, baseDir: String, slug: String,
-      nlist: Int, iters: Int): Array[Array[Double]] = {
-    val (asVec, freeAsVec) = OpCache.checkpointWithHandle(
-      GlobalOrder.withGlobalRank(
-        emb.select(col("node"), col("vec")), Seq(col("node")), "rk")
-        .select((col("rk") - 1).as("vec_id"), col("vec").as("embedding")))
-    try Similarity.publishedIvfCentroids(asVec, baseDir, slug, nlist, iters)
-    finally freeAsVec()
-  }
-
-  /** [[embeddingCentroids]] plus, when `gprobe > 0`, the published
-    * two-level group quantizer for that centroid table — ONE asVec
-    * construction and fingerprint pass feeds both publishes. Returns
-    * the centroids and the `ivfServingSides` hier argument
-    * ((group centroids, gprobe), None when two-level is off).
+  /** Published IVF centroids over a `(node, vec)` table plus, when
+    * `gprobe > 0`, the published two-level group quantizer for that
+    * centroid table — ONE asVec construction and fingerprint pass feeds
+    * both publishes. The rank-keyed view exists for TRAINING only
+    * (deterministic k-means init needs the first nlist vectors of a total
+    * order); node-sized shuffle with a lineage cut, blocks freed as soon
+    * as the (driver-bounded) centroid values are in hand. Steady state
+    * pays one node-sized fingerprint scan; training runs once per
+    * publish. Returns the centroids and the `hierGroups` argument of
+    * [[Similarity.ivfCandidates]] ((group centroids, gprobe), None when
+    * two-level is off).
     */
   private def embeddingCentroidsAndGroups(
       emb: DataFrame, baseDir: String, slug: String,
@@ -2030,71 +2005,40 @@ object Graph {
     } finally freeAsVec()
   }
 
-  /** The two IVF serving sides over node strings: the assigned corpus
-    * (node, vec, nrm, nv, cluster — materialized, it feeds both sides)
-    * and the query cohort with its nprobe probe lists EXPLODED to
-    * (query, qv, qn, cluster) rows — so the candidate former is an
-    * EQUI-join on the cluster id (round 16: the previous
-    * array_contains(probe_clusters, cluster) gate carried no equi key,
-    * so Spark ran a BroadcastNestedLoopJoin over ALL |Q|·corpus pairs —
-    * pruning cut the output, not the scan, and the every-user cohort
-    * paid the full quadratic pass the IVF exists to avoid). Probe lists
-    * are distinct cluster ids, so the exploded equi-join produces the
-    * SAME candidate set and every downstream value is unchanged
-    * (oracles stay hash-green).
+  /** Graph's serving names for the shared Similarity stages. */
+  private val NodeColumns = Similarity.AnnColumns("node", "query", "vec")
+
+  /** (node, vec, nrm): the published table with its norms — Graph's own
+    * corpus prep (the table is node-sized and already doubles).
     */
-  private def ivfServingSides(
+  private def normed(emb: DataFrame): DataFrame =
+    emb.select(col("node"), col("vec"), VectorOps.l2Norm(col("vec")).as("nrm"))
+
+  /** The query cohort's rows of `n` as the rerank's (query, qv, qn). */
+  private def querySide(n: DataFrame, queries: DataFrame): DataFrame =
+    n.join(queries, Seq("node"), "left_semi").select(NodeColumns.querySide: _*)
+
+  /** The IVF candidates of [[Similarity.ivfCandidates]] over node
+    * strings: the corpus is the published table with its unit vectors,
+    * and the query rows are the cohort's rows of the assigned corpus.
+    */
+  private def ivfCandidates(
       emb: DataFrame, queries: DataFrame,
       cents: Array[Array[Double]], nprobe: Int,
-      broadcastQueries: Option[Boolean] = None,
-      hierGroups: Option[(Array[Array[Double]], Int)] = None): (DataFrame, DataFrame) = {
-    val n = OpCache.materialize(
-      emb.select(col("node"), col("vec"),
-        VectorOps.l2Norm(col("vec")).as("nrm"))
-        .withColumn("nv", transform(col("vec"), x => x / col("nrm")))
-        .withColumn("cluster", Similarity.assignCluster(col("nv"), cents)))
-    // nlist-wide scoring fused inside the codegen'd probeStructs
-    // expression (constant plan size in nlist — round-16 verdict item 2);
-    // the transform runs over nprobe elements only. With hierGroups the
-    // query-side selection is TWO-LEVEL (top-gprobe groups, then their
-    // members — O(√nlist) per query instead of O(nlist)); corpus-side
-    // cluster ASSIGNMENT stays exact — it defines the index
-    val probes = transform(hierGroups match {
-      case Some((gcents, gprobe)) =>
-        Similarity.hierProbeStructs(col("nv"), gcents, cents, gprobe, nprobe)
-      case None => Similarity.probeStructs(col("nv"), cents, nprobe)
-    }, s => s.getField("i"))
-    val qBase = n.join(queries, Seq("node"), "left_semi")
-      .select(col("node").as("query"), col("vec").as("qv"),
-        col("nrm").as("qn"), probes.as("probe_clusters"))
-    // the broadcastRanks idiom (round-16 verdict item 1): the cohort side
-    // was force-broadcast unconditionally, which FAILS outright — "Cannot
-    // broadcast the table" — once |Q|·nprobe query-vector rows cross
-    // Spark's 8 GiB BroadcastExchange cap (~100× the measured cohort).
-    // Gate the hint on the measured cohort size; above the cap the
-    // equi-join shuffles both sides on `cluster` (balanced: ~250
-    // vectors/cluster by the nlist rule). The count prunes the probe
-    // scorer (unused column), so it costs one semi-join pass.
-    val bq = broadcastQueries.getOrElse(
-      qBase.count() * nprobe <= Similarity.MaxBroadcastProbeRows)
-    val q = qBase.select(col("query"), col("qv"), col("qn"),
-      explode(col("probe_clusters")).as("cluster"))
-    (n, if (bq) broadcast(q) else q)
-  }
+      hier: Option[(Array[Array[Double]], Int)],
+      broadcastQueries: Option[Boolean],
+      corpusWhere: Option[Column] = None): DataFrame =
+    Similarity.ivfCandidates(
+      normed(emb).withColumn("nv", transform(col("vec"), x => x / col("nrm"))),
+      cents, nprobe, hier, broadcastQueries, NodeColumns, corpusWhere)(
+      _.join(queries, Seq("node"), "left_semi"))
 
-  private def scoreCosine(cands: DataFrame): DataFrame =
-    cands.select(col("query"), col("node"),
-      VectorOps.cosineWithNorms(
-        VectorOps.dot(col("qv"), col("vec")),
-        col("qn"), col("nrm")).as("cosine"))
-
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query"))
-      .orderBy(col("cosine").desc, col("node"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query"), col("rank"), col("node"), col("cosine"))
-  }
+  /** Link-prediction candidates minus the current adjacency — removed
+    * BEFORE the rank window, so the k slots go to genuinely new edges.
+    */
+  private def withoutEdges(cands: DataFrame, edges: DataFrame): DataFrame =
+    cands.join(edges.select(col("u").as("query"), col("v").as("node")),
+      Seq("query", "node"), "left_anti")
 
   /** Link prediction over the published embeddings — the canonical
     * downstream consumer of node embeddings (predict edges that do not
@@ -2110,24 +2054,10 @@ object Graph {
   def linkPrediction(
       emb: DataFrame, edges: DataFrame, queries: DataFrame,
       k: Int = 5, sidePrefix: String = "s:"): DataFrame = {
-    val n = emb.select(col("node"), col("vec"),
-      VectorOps.l2Norm(col("vec")).as("nrm"))
-    val q = n.join(queries, Seq("node"), "left_semi")
-      .select(col("node").as("query"), col("vec").as("qv"),
-        col("nrm").as("qn"))
-    val scored = n.where(col("node").startsWith(sidePrefix))
-      .join(broadcast(q), col("node") =!= col("query"))
-      .join(edges.select(col("u").as("query"), col("v").as("node")),
-        Seq("query", "node"), "left_anti")
-      .select(col("query"), col("node"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("vec")),
-          col("qn"), col("nrm")).as("cosine"))
-    val w = Window.partitionBy(col("query"))
-      .orderBy(col("cosine").desc, col("node"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query"), col("rank"), col("node"), col("cosine"))
+    val n = normed(emb)
+    val cands = n.where(col("node").startsWith(sidePrefix))
+      .join(broadcast(querySide(n, queries)), col("node") =!= col("query"))
+    Similarity.cosineTopK(withoutEdges(cands, edges), k, NodeColumns)
   }
 
   /** Promotion-gate QA report for a published embedding table — the
@@ -2142,8 +2072,7 @@ object Graph {
     * one partial aggregate — never pairs², and the report is ≤ 4 rows.
     */
   def embeddingEval(emb: DataFrame, salt: String = "embeval"): DataFrame = {
-    val n = emb.select(col("node"), col("vec"),
-      VectorOps.l2Norm(col("vec")).as("nrm"))
+    val n = normed(emb)
     val vocab = OpCache.materialize(
       GlobalOrder.withGlobalRank(
         n.select(col("node")), Seq(col("node")), "rk")

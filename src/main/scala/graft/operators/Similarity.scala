@@ -9,20 +9,26 @@ import graft.functions.VectorOps
 
 /** Similarity search over an embedding column (`array<float>`, dim 64).
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small) query
-  *    set against the corpus, rank with a per-query window. The corpus side
-  *    streams map-only (no corpus shuffle until the final per-query top-k,
-  *    which TakeOrdered-style aggregates k rows per query). This is the
-  *    oracle anchor and the right plan whenever |queries| is small.
-  *  - [[lshTopK]]: random-hyperplane LSH (sign-bit buckets, multiple
-  *    tables) — the 100 TB path. Corpus is bucketed once (map-only),
-  *    queries probe their bucket per table, candidates = bucket matches,
-  *    ranked by exact cosine. Candidate count ≈ T · n / 2^bits per query
-  *    instead of n.
+  * Every top-k spelling is one candidate-generation stage followed by one
+  * exact-ranking stage, and each stage is written once here:
+  *  - [[cosineTopK]], the exact-cosine top-k tail: sequential-fold cosine
+  *    over (qv, qn) × (vector, nrm), a per-query `(cosine desc, id)`
+  *    window, `rank <= k`. [[bruteForceTopK]] (broadcast the bounded query
+  *    set against the corpus — the oracle anchor), [[lshTopK]], the IVF and
+  *    PQ paths below and Graph's neighbor and link-prediction queries all
+  *    end in it, over [[VecColumns]] or Graph's `(node, query, vec)` names.
+  *  - [[ivfCandidates]], the IVF candidate former: nearest-centroid
+  *    assignment of the corpus, the flat or two-level probe list per query,
+  *    the size-gated query-side broadcast and the exploded `cluster`
+  *    equi-join. [[ivfTopK]] and Graph's IVF serving paths share it.
+  *  - [[adcTopK]], the PQ/ADC stage: fused codes, per-query ADC tables
+  *    built on the driver, the m-term approximate score, the
+  *    `rerank`-sized shortlist and its exact rerank. [[pqTopK]] and
+  *    [[ivfPqTopK]] differ only in the candidate join they pass it.
   *
-  * Hyperplanes are generated from a fixed seed at plan-build time and
-  * inlined as literals, so results are deterministic across runs/engines.
+  * Hyperplanes, centroids and codebooks enter plans as task data or
+  * literals fixed at plan-build time, so results are deterministic across
+  * runs and replayable by the DuckDB oracle.
   */
 object Similarity {
 
@@ -41,11 +47,27 @@ object Similarity {
       external: Option[DataFrame]): DataFrame =
     external match {
       case Some(q) =>
-        q.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.l2Norm(col("v")))
-          .withColumn("nv", transform(col("v"), x => x / col("nrm")))
+        withUnitVector(
+          q.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
+            .withColumn("nrm", VectorOps.l2Norm(col("v"))))
       case None => corpus.where(col("vec_id") < numQueries)
     }
+
+  /** (vec_id, v, nrm): the corpus as doubles with its L2 norms — the
+    * corpus prep every Similarity serving path starts from.
+    */
+  private def normedCorpus(embeddings: DataFrame): DataFrame =
+    Partitioning.ensureParallelism(embeddings, col("vec_id"))
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
+      .withColumn("nrm", VectorOps.l2Norm(col("v")))
+
+  private def withUnitVector(corpus: DataFrame): DataFrame =
+    corpus.withColumn("nv", transform(col("v"), x => x / col("nrm")))
+
+  private def normalize(c: Array[Double]): Array[Double] = {
+    val n = math.sqrt(c.map(x => x * x).sum)
+    if (n == 0) c else c.map(_ / n)
+  }
 
   /** Exact top-k by cosine for each query vector (queries = the first
     * `numQueries` corpus vectors by vec_id, or an external query table —
@@ -56,22 +78,9 @@ object Similarity {
       numQueries: Int = 10,
       k: Int = 5,
       queryTable: Option[DataFrame] = None): DataFrame = {
-    val e = Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-    val queries = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    val e = normedCorpus(embeddings)
+    val queries = queryBase(e, numQueries, queryTable).select(VecColumns.querySide: _*)
+    cosineTopK(e.join(broadcast(queries), col("vec_id") =!= col("query_id")), k)
   }
 
   /** Binary (sign-quantized) ANN top-k — the 1-bit-per-dimension
@@ -149,11 +158,8 @@ object Similarity {
       numQueries: Int = 10,
       threshold: Double = 0.3,
       queryTable: Option[DataFrame] = None): DataFrame = {
-    val e = Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-    val queries = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val e = normedCorpus(embeddings)
+    val queries = queryBase(e, numQueries, queryTable).select(VecColumns.querySide: _*)
     e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(
         col("query_id"), col("vec_id"),
@@ -346,10 +352,7 @@ object Similarity {
       nlist: Int = 16,
       iters: Int = 3): DataFrame = {
     val cents = publishedIvfCentroids(embeddings, baseDir, slug, nlist, iters)
-    val sil = Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-      .withColumn("nv", transform(col("v"), x => x / col("nrm")))
+    val sil = withUnitVector(normedCorpus(embeddings))
       .withColumn("top2", probeStructs(col("nv"), cents, 2))
       .select(col("vec_id"),
         element_at(col("top2"), 1).getField("i").as("cluster"),
@@ -560,9 +563,7 @@ object Similarity {
   def kCenterCoreset(embeddings: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 1, "k must be positive")
     val base = OpCache.materialize(
-      Partitioning.ensureParallelism(embeddings, col("vec_id"))
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.l2Norm(col("v")))
+      normedCorpus(embeddings)
         .select(col("vec_id"),
           transform(col("v"), x => x / col("nrm")).as("nv")))
     def vecOf(r: org.apache.spark.sql.Row): Array[Double] =
@@ -683,9 +684,7 @@ object Similarity {
       k: Int = 5,
       poolK: Int = 10,
       lambda: Double = 0.5): DataFrame = {
-    val e = Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
+    val e = normedCorpus(embeddings)
     val cand = bruteForceTopK(embeddings, numQueries, poolK)
       .select(col("query_id"), col("vec_id"), col("cosine").as("rel"))
     // bounded pulls (the centroid/codebook class): |queries|·poolK
@@ -861,10 +860,6 @@ object Similarity {
             col("vec_id").cast("string")))) % every === 0L)
         }
       }).persist()
-    def normalize(c: Array[Double]): Array[Double] = {
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n == 0) c else c.map(_ / n)
-    }
     var cents: Array[Array[Double]] = init.map(_.map(normalize))
       .getOrElse(base.where(col("vec_id") < nlist)
       .orderBy(col("vec_id")).collect()
@@ -905,9 +900,7 @@ object Similarity {
     */
   def assignVectors(
       embeddings: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
+    normedCorpus(embeddings)
       .withColumn("cluster",
         assignCluster(transform(col("v"), x => x / col("nrm")), cents))
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
@@ -924,7 +917,7 @@ object Similarity {
     * shuffle is balanced by construction and the plan survives cohorts
     * of any size instead of aborting at the broadcast limit.
     */
-  private[graft] val MaxBroadcastProbeRows: Long = 2L * 1000 * 1000
+  private val MaxBroadcastProbeRows: Long = 2L * 1000 * 1000
 
   /** Ordered top-`nprobe` centroid scores — `array<struct<d, i>>`, dot
     * descending, ties to the larger list id — as ONE codegen'd expression
@@ -965,6 +958,87 @@ object Similarity {
   private[operators] def assignCluster(nv: Column, cents: Array[Array[Double]]): Column =
     probeStructs(nv, cents, 1).getItem(0).getField("i")
 
+  /** Column names of one serving family: the corpus id, the query id the
+    * top-k output carries, and the corpus vector column —
+    * [[VecColumns]] here, `(node, query, vec)` in [[Graph]].
+    */
+  private[graft] final case class AnnColumns(id: String, query: String, vec: String) {
+    /** The query side of the exact rerank, (query, qv, qn), selected from
+      * rows in corpus naming.
+      */
+    def querySide: Seq[Column] =
+      Seq(col(id).as(query), col(vec).as("qv"), col("nrm").as("qn"))
+  }
+
+  private val VecColumns = AnnColumns("vec_id", "query_id", "v")
+
+  /** The exact-cosine top-k tail every serving spelling ends in. Over
+    * candidate rows carrying the query side (qv, qn) and the corpus side
+    * (`c.vec`, nrm): the sequential-fold cosine (bit-identical to the
+    * oracle's list_reduce), a per-query window ordered by (cosine desc,
+    * id), cut at `rank <= k`. Output: (query, rank, id, cosine).
+    */
+  private[graft] def cosineTopK(
+      cands: DataFrame, k: Int, c: AnnColumns = VecColumns): DataFrame = {
+    val w = Window.partitionBy(col(c.query))
+      .orderBy(col("cosine").desc, col(c.id))
+    cands
+      .select(col(c.query), col(c.id),
+        VectorOps.cosineWithNorms(
+          VectorOps.dot(col("qv"), col(c.vec)), col("qn"), col("nrm")).as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(c.query, "rank", c.id, "cosine")
+  }
+
+  /** The IVF candidate former shared by [[ivfTopK]] and Graph's IVF
+    * serving paths. `corpus` carries (`c.id`, `c.vec`, nrm, nv) from the
+    * caller's own prep; it is assigned to its nearest centroid and
+    * materialized, since it feeds both sides. `queries` picks the query
+    * rows from that assigned corpus, and each gets its `nprobe` probe list:
+    * flat, or two-level (top-`gprobe` groups, then their members only)
+    * when `hierGroups` carries the published group quantizer. Corpus-side
+    * assignment stays exact either way — it defines the index.
+    *
+    * Probe lists EXPLODE into (query, cluster) rows so the candidate join
+    * is an EQUI-join on the cluster id (round 16): the array_contains gate
+    * before it had no equi key, so Spark ran a BroadcastNestedLoopJoin
+    * over ALL |Q|·corpus pairs — pruning cut the output, not the scan.
+    * Probe lists are distinct cluster ids, so the candidate SET, and every
+    * downstream value, is unchanged.
+    *
+    * `broadcastQueries` = None measures the cohort (the count prunes the
+    * probe scorer) and broadcasts it only while |Q|·nprobe stays under
+    * [[MaxBroadcastProbeRows]]; above the cap the join shuffles both sides
+    * on `cluster` instead of aborting at Spark's 8 GiB broadcast limit.
+    * `corpusWhere` restricts the corpus side of the join. Output: the
+    * candidate rows, self-matches removed, ready for [[cosineTopK]].
+    */
+  private[graft] def ivfCandidates(
+      corpus: DataFrame, cents: Array[Array[Double]], nprobe: Int,
+      hierGroups: Option[(Array[Array[Double]], Int)],
+      broadcastQueries: Option[Boolean], c: AnnColumns = VecColumns,
+      corpusWhere: Option[Column] = None)(
+      queries: DataFrame => DataFrame): DataFrame = {
+    val e = OpCache.materialize(
+      corpus.withColumn("cluster", assignCluster(col("nv"), cents)))
+    // the nlist-wide scoring is fused inside the codegen'd probe
+    // expression; the transform runs over nprobe elements, not nlist
+    val probes = transform(hierGroups match {
+      case Some((gcents, gprobe)) =>
+        hierProbeStructs(col("nv"), gcents, cents, gprobe, nprobe)
+      case None => probeStructs(col("nv"), cents, nprobe)
+    }, s => s.getField("i"))
+    val qBase = queries(e).select(c.querySide :+ probes.as("probe_clusters"): _*)
+    val bq = broadcastQueries.getOrElse(
+      qBase.count() * nprobe <= MaxBroadcastProbeRows)
+    val q = qBase.select(col(c.query), col("qv"), col("qn"),
+      explode(col("probe_clusters")).as("cluster"))
+    corpusWhere.fold(e)(p => e.where(p))
+      .join(if (bq) broadcast(q) else q, Seq("cluster"))
+      .where(col(c.id) =!= col(c.query))
+  }
+
   /** Input fingerprint of the published training artifacts: one
     * map-side pass over (vec_id, embedding) — a table trained on other
     * data is rebuilt, never silently served.
@@ -973,83 +1047,28 @@ object Similarity {
     PublishGuard.fingerprint(embeddings, Seq(col("vec_id"), col("embedding")))
 
   /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid
-    * (map-only once trained); each query probes its `nprobe` closest
-    * centroids' buckets and reranks candidates by exact cosine. Candidate
-    * count ≈ nprobe/nlist of the corpus — the inverted-file scale path,
-    * complementary to [[lshTopK]].
-    *
-    * Training is split from search: pass `centroids` (the published
-    * path, [[ivfTopKPublished]]) so the k-means runs once per corpus, not
-    * per query call.
+    * (map-only against the given, already-trained `centroids` — the
+    * published path is [[ivfTopKPublished]]); each query probes its
+    * `nprobe` closest centroids' buckets and reranks candidates by exact
+    * cosine. Candidate count ≈ nprobe/nlist of the corpus — the
+    * inverted-file scale path, complementary to [[lshTopK]].
     */
   def ivfTopK(
       embeddings: DataFrame,
+      centroids: Array[Array[Double]],
       numQueries: Int = 10,
       k: Int = 5,
-      nlist: Int = 16,
       nprobe: Int = 4,
-      iters: Int = 3,
-      centroids: Option[Array[Array[Double]]] = None,
       queryTable: Option[DataFrame] = None,
-      broadcastQueries: Option[Boolean] = None,
       hierGroups: Option[(Array[Array[Double]], Int)] = None): DataFrame = {
-    val cents = centroids.getOrElse(trainIvfCentroids(embeddings, nlist, iters))
-    // the bucketed corpus feeds both the query side and the probe join
-    val e = OpCache.materialize(
-      Partitioning.ensureParallelism(embeddings, col("vec_id"))
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.l2Norm(col("v")))
-        .withColumn("nv", transform(col("v"), x => x / col("nrm")))
-        .withColumn("cluster", assignCluster(col("nv"), cents)))
-
-    // per-query probe list: nprobe clusters with the highest centroid dot
-    // (the transform runs over nprobe elements, not nlist — the nlist-wide
-    // scoring is fused inside the codegen'd probeStructs expression;
-    // hierGroups switches selection to the TWO-LEVEL published group
-    // quantizer — top-gprobe groups, then their members only)
-    val probes = transform(hierGroups match {
-      case Some((gcents, gprobe)) =>
-        hierProbeStructs(col("nv"), gcents, cents, gprobe, nprobe)
-      case None => probeStructs(col("nv"), cents, nprobe)
-    }, s => s.getField("i"))
-    // probe lists EXPLODE into (query, cluster) rows so the candidate
-    // former is an EQUI-join on the cluster id (round 16): the previous
-    // array_contains gate had no equi key, so Spark ran a
-    // BroadcastNestedLoopJoin evaluating ALL |Q|·corpus pairs — the
-    // pruning cut the output, not the scan, and an every-user cohort
-    // (graft.IvfServingBench) paid the full quadratic pass. The exploded
-    // join evaluates exactly the candidate set (nprobe/nlist of
-    // |Q|·corpus); probe lists are distinct cluster ids, so the
-    // candidate SET — and every downstream value — is unchanged.
-    val queriesBase = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), probes.as("probe_clusters"))
-    // size-gate the cohort-side broadcast (round-16 verdict item 1; the
-    // shared MaxBroadcastProbeRows contract): the internal numQueries
-    // path is bounded by construction, but an external queryTable can be
-    // cohort-shaped — measure it (count prunes the probe scorer) and
-    // drop the hint above the cap so the join shuffles on `cluster`
-    // instead of aborting at Spark's 8 GiB broadcast limit
-    val bq = broadcastQueries.getOrElse(queryTable.isEmpty ||
-      queriesBase.count() * nprobe <= MaxBroadcastProbeRows)
-    val queries = queriesBase
-      .select(col("query_id"), col("qv"), col("qn"),
-        explode(col("probe_clusters")).as("cluster"))
-
-    val cands = e.join(if (bq) broadcast(queries) else queries, Seq("cluster"))
-      .where(col("vec_id") =!= col("query_id"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cands
-      .select(col("query_id"), col("vec_id"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    // the internal numQueries prefix is bounded by construction, so only
+    // an external (possibly cohort-shaped) queryTable is measured
+    val cands = ivfCandidates(withUnitVector(normedCorpus(embeddings)),
+      centroids, nprobe, hierGroups,
+      broadcastQueries = if (queryTable.isEmpty) Some(true) else None)(
+      queryBase(_, numQueries, queryTable))
+    cosineTopK(cands, k)
   }
-
 
   /** All `m` PQ subspace codes in ONE fused codegen'd pass
     * ([[graft.functions.PqCodesExpr]] — the [[probeStructs]] discipline
@@ -1153,8 +1172,7 @@ object Similarity {
       iters: Int = 3,
       queryTable: Option[DataFrame] = None): DataFrame = {
     val cents = publishedIvfCentroids(embeddings, baseDir, slug, nlist, iters)
-    ivfTopK(embeddings, numQueries, k, nlist, nprobe, iters, Some(cents),
-      queryTable = queryTable)
+    ivfTopK(embeddings, cents, numQueries, k, nprobe, queryTable)
   }
 
   /** [[ivfTopKPublished]] with TWO-LEVEL probe selection (round 17): the
@@ -1182,8 +1200,8 @@ object Similarity {
     val gcents = publishedIvfGroups(
       embeddings, baseDir, slug, nlist, iters, ngroups,
       centroids = Some(cents))
-    ivfTopK(embeddings, numQueries, k, nlist, nprobe, iters, Some(cents),
-      queryTable = queryTable, hierGroups = Some((gcents, gprobe)))
+    ivfTopK(embeddings, cents, numQueries, k, nprobe, queryTable,
+      hierGroups = Some((gcents, gprobe)))
   }
 
   /** Write trained IVF centroids as a (list_id, centroid) parquet table.
@@ -1249,8 +1267,7 @@ object Similarity {
       tau: Double = 0.45): DataFrame = {
     val cents = publishedIvfCentroids(embeddings, baseDir, slug, nlist, iters)
     val assigned = OpCache.materialize(
-      assignVectors(embeddings, cents)
-        .withColumn("nv", transform(col("v"), x => x / col("nrm")))
+      withUnitVector(assignVectors(embeddings, cents))
         .select(col("vec_id"), col("cluster"), col("nv")))
     val pairs = assigned.as("a")
       .join(assigned.as("b"),
@@ -1447,10 +1464,6 @@ object Similarity {
       init: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
     require(ngroups > 0 && ngroups <= cents.length,
       s"need 0 < ngroups <= nlist: ngroups=$ngroups nlist=${cents.length}")
-    def normalize(c: Array[Double]): Array[Double] = {
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n == 0) c else c.map(_ / n)
-    }
     var g: Array[Array[Double]] = init.map(_.map(normalize))
       .getOrElse(cents.take(ngroups).map(c => normalize(c.clone())))
     (1 to iters).foreach { _ =>
@@ -1538,8 +1551,7 @@ object Similarity {
       dim: Int = 64,
       queryTable: Option[DataFrame] = None): DataFrame = {
     val books = publishedPqCodebooks(embeddings, baseDir, slug, m, ksub, 3, dim)
-    pqTopK(embeddings, numQueries, k, m, ksub, rerank, dim, Some(books),
-      queryTable = queryTable)
+    pqTopK(embeddings, books, numQueries, k, m, rerank, dim, queryTable)
   }
 
   /** [[ivfPqTopK]] with BOTH trained artifacts published —
@@ -1564,56 +1576,38 @@ object Similarity {
       queryTable: Option[DataFrame] = None): DataFrame = {
     val cents = publishedIvfCentroids(embeddings, baseDir, s"${slug}_centroids", nlist, 3)
     val books = publishedPqCodebooks(embeddings, baseDir, s"${slug}_codebooks", m, ksub, 3, dim)
-    ivfPqTopK(embeddings, numQueries, k, nlist, nprobe, m, ksub, rerank, dim,
-      Some(cents), Some(books), queryTable = queryTable)
+    ivfPqTopK(embeddings, cents, books, numQueries, k, nprobe, m, rerank, dim,
+      queryTable)
   }
 
-  /** ANN top-k via product quantization with asymmetric distance (ADC):
-    * the corpus is compressed to `m` small codes per vector (here m ints;
-    * a byte each in storage terms — n·m bytes scanned instead of
-    * n·dim·4), each query precomputes one `m × ksub` dot-product lookup
-    * table against the codebooks, and the candidate scan is `m` table
-    * lookups per corpus row — the classic IVF-less PQ scan. The approx
-    * top-`rerank` shortlist per query is re-ranked by exact cosine over
-    * the uncompressed vectors, so returned scores are exact and the
-    * compression only affects recall (measured in SimilaritySpec).
+  /** The PQ/ADC shortlist-and-rerank shared by [[pqTopK]] and
+    * [[ivfPqTopK]]. `e` is the caller's materialized corpus (vec_id, v,
+    * nrm, nv, plus the `keep` columns its candidate join needs). The
+    * compressed index is (vec_id, keep…, c0…c(m-1)) — all the ADC scan
+    * reads: the codes array is ONE fused expression evaluated once per row
+    * (the two-project shape keeps CollapseProject from inlining m copies)
+    * and getItem fans it out to the per-subspace columns.
     *
-    * The query vectors (bounded: `numQueries` rows) are collected to build
-    * the lookup tables as literals — the per-query preprocessing step of
-    * any PQ implementation, here done at plan-build time.
+    * Each query's ADC table, table[s][j] = q_sub(s) · book(s)(j), is built
+    * on the driver; `candidates` joins the coded index to the query rows
+    * (query_id, unit vector, tables) and yields (…, query_id, tables) rows.
+    * The m-term approximate score then keeps the top-`rerank` shortlist
+    * per query, re-ranked by exact cosine over the uncompressed vectors —
+    * so returned scores are exact and PQ affects recall only.
     */
-  def pqTopK(
-      embeddings: DataFrame,
-      numQueries: Int = 10,
-      k: Int = 5,
-      m: Int = 8,
-      ksub: Int = 16,
-      rerank: Int = 50,
-      dim: Int = 64,
-      codebooks: Option[Array[Array[Array[Double]]]] = None,
-      queryTable: Option[DataFrame] = None): DataFrame = {
-    val books = codebooks.getOrElse(trainPqCodebooks(embeddings, m, ksub, 3, dim))
+  private def adcTopK(
+      e: DataFrame, keep: Seq[Column], books: Array[Array[Array[Double]]],
+      m: Int, dim: Int, numQueries: Int, k: Int, rerank: Int,
+      queryTable: Option[DataFrame])(
+      candidates: (DataFrame, Seq[(Long, Array[Double], IndexedSeq[Seq[Double]])]) =>
+        DataFrame): DataFrame = {
     val dsub = dim / m
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val e = OpCache.materialize( // feeds encoding, the query side, and the rerank
-      Partitioning.ensureParallelism(embeddings, col("vec_id"))
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.l2Norm(col("v")))
-        .withColumn("nv", transform(col("v"), x => x / col("nrm"))))
-
-    // the compressed index: ids + m codes (this is ALL the ADC scan
-    // reads). The codes array is ONE fused expression evaluated once per
-    // row (the two-project shape keeps CollapseProject from inlining m
-    // copies); getItem fans it out to the per-subspace columns
     val coded = e
       .withColumn("codes", pqCodes(col("nv"), books, dsub))
-      .select(
-        (col("vec_id") +: (0 until m).map { s =>
-          col("codes").getItem(s).as(s"c$s")
-        }): _*)
+      .select((col("vec_id") +: keep) ++ (0 until m).map { s =>
+        col("codes").getItem(s).as(s"c$s")
+      }: _*)
 
-    // per-query ADC tables: table[s][j] = q_sub(s) · book(s)(j)
     // DRIVER-BOUNDED by contract: each query gets an m-row ADC lookup
     // table built on the driver, so the query side must stay a bounded
     // set — an external cohort-shaped table fails loudly here instead of
@@ -1625,43 +1619,67 @@ object Similarity {
         s"ADC serving builds per-query driver tables: $nq external " +
           "queries > 10000 — route cohort-scale serving through ivfTopK")
     }
-    val qTables = queryBase(e, numQueries, queryTable)
+    val qRows = queryBase(e, numQueries, queryTable)
       .select(col("vec_id"), col("nv")).orderBy(col("vec_id")).collect()
       .map { r =>
-        val qid = r.getLong(0)
         val qnv = r.getAs[scala.collection.Seq[Double]]("nv").toArray
         val tabs = (0 until m).map { s =>
           books(s).map(c =>
             (0 until dsub).map(d => qnv(s * dsub + d) * c(d)).sum).toSeq
         }
-        (qid, tabs)
-      }.toSeq.toDF("query_id", "tables")
+        (r.getLong(0), qnv, tabs)
+      }.toSeq
 
     val approx = (0 until m).map { s =>
       element_at(element_at(col("tables"), s + 1), col(s"c$s") + 1)
     }.reduce(_ + _)
     val wApprox = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("vec_id"))
-    val shortlist = coded.join(broadcast(qTables), col("vec_id") =!= col("query_id"))
+    val shortlist = candidates(coded, qRows)
       .select(col("query_id"), col("vec_id"), approx.as("approx"))
       .withColumn("arank", row_number().over(wApprox))
       .where(col("arank") <= rerank)
       .select("query_id", "vec_id")
 
     // exact rerank of the shortlist over the uncompressed vectors
-    val queries = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    val queries = queryBase(e, numQueries, queryTable).select(VecColumns.querySide: _*)
+    cosineTopK(shortlist.join(e, "vec_id").join(broadcast(queries), "query_id"), k)
+  }
+
+  /** ANN top-k via product quantization with asymmetric distance (ADC):
+    * the corpus is compressed to `m` small codes per vector (here m ints;
+    * a byte each in storage terms — n·m bytes scanned instead of
+    * n·dim·4), each query precomputes one `m × ksub` dot-product lookup
+    * table against the given, already-trained `codebooks` (the published
+    * path is [[pqTopKPublished]]), and the candidate scan is `m` table
+    * lookups per corpus row — the classic IVF-less PQ scan. The approx
+    * top-`rerank` shortlist per query is re-ranked by exact cosine over
+    * the uncompressed vectors ([[adcTopK]]), so returned scores are exact
+    * and the compression only affects recall (measured in SimilaritySpec).
+    *
+    * The query vectors (bounded: `numQueries` rows) are collected to build
+    * the lookup tables as literals — the per-query preprocessing step of
+    * any PQ implementation, here done at plan-build time.
+    */
+  def pqTopK(
+      embeddings: DataFrame,
+      codebooks: Array[Array[Array[Double]]],
+      numQueries: Int = 10,
+      k: Int = 5,
+      m: Int = 8,
+      rerank: Int = 50,
+      dim: Int = 64,
+      queryTable: Option[DataFrame] = None): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    // feeds encoding, the query side, and the rerank
+    val e = OpCache.materialize(withUnitVector(normedCorpus(embeddings)))
+    adcTopK(e, Nil, codebooks, m, dim, numQueries, k, rerank, queryTable) {
+      (coded, qRows) =>
+        val qTables = qRows.map { case (qid, _, tabs) => (qid, tabs) }
+          .toDF("query_id", "tables")
+        coded.join(broadcast(qTables), col("vec_id") =!= col("query_id"))
+    }
   }
 
   /** ANN top-k via IVF + PQ — the production pairing at extreme scale:
@@ -1679,92 +1697,37 @@ object Similarity {
     */
   def ivfPqTopK(
       embeddings: DataFrame,
+      centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
       numQueries: Int = 10,
       k: Int = 5,
-      nlist: Int = 16,
       nprobe: Int = 4,
       m: Int = 8,
-      ksub: Int = 16,
       rerank: Int = 50,
       dim: Int = 64,
-      centroids: Option[Array[Array[Double]]] = None,
-      codebooks: Option[Array[Array[Array[Double]]]] = None,
       queryTable: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse(trainIvfCentroids(embeddings, nlist, 3))
-    val books = codebooks.getOrElse(trainPqCodebooks(embeddings, m, ksub, 3, dim))
-    val dsub = dim / m
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = OpCache.materialize( // the index build: cluster + codes, once
-      Partitioning.ensureParallelism(embeddings, col("vec_id"))
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.l2Norm(col("v")))
-        .withColumn("nv", transform(col("v"), x => x / col("nrm")))
-        .withColumn("cluster", assignCluster(col("nv"), cents)))
-    val coded = e
-      .withColumn("codes", pqCodes(col("nv"), books, dsub))
-      .select(
-        (col("vec_id") +: col("cluster") +: (0 until m).map { s =>
-          col("codes").getItem(s).as(s"c$s")
-        }): _*)
-
-    // per-query probe list + ADC tables, driver-built from the bounded set
-    // DRIVER-BOUNDED by contract: each query gets an m-row ADC lookup
-    // table built on the driver, so the query side must stay a bounded
-    // set — an external cohort-shaped table fails loudly here instead of
-    // collecting the cohort into driver memory (use ivfTopK's
-    // distributed probe join for cohort-scale serving)
-    queryTable.foreach { qt =>
-      val nq = qt.count()
-      require(nq <= 10000,
-        s"ADC serving builds per-query driver tables: $nq external " +
-          "queries > 10000 — route cohort-scale serving through ivfTopK")
-    }
-    val qSide = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id"), col("nv")).orderBy(col("vec_id")).collect()
-      .map { r =>
-        val qid = r.getLong(0)
-        val qnv = r.getAs[scala.collection.Seq[Double]]("nv").toArray
-        val probes = cents.zipWithIndex
+      withUnitVector(normedCorpus(embeddings))
+        .withColumn("cluster", assignCluster(col("nv"), centroids)))
+    adcTopK(e, Seq(col("cluster")), codebooks, m, dim, numQueries, k, rerank,
+      queryTable) { (coded, qRows) =>
+      // driver-side probe lists: dot descending, and the stable sortBy
+      // keeps ties in ascending list_id order — the order the
+      // sim_ivfpq_topk oracle replays (probeStructs sends ties the other
+      // way). Probes explode to (query, cluster) rows → EQUI-join on the
+      // cluster id, as in ivfCandidates
+      val probeRows = qRows.map { case (qid, qnv, tabs) =>
+        val probes = centroids.zipWithIndex
           .map { case (c, i) => (c.zip(qnv).map { case (a, b) => a * b }.sum, i) }
           .sortBy(-_._1).take(nprobe).map(_._2).toSeq
-        val tabs = (0 until m).map { s =>
-          books(s).map(c =>
-            (0 until dsub).map(d => qnv(s * dsub + d) * c(d)).sum).toSeq
-        }
         (qid, probes, tabs)
-      }.toSeq.toDF("query_id", "probes", "tables")
-
-    val approx = (0 until m).map { s =>
-      element_at(element_at(col("tables"), s + 1), col(s"c$s") + 1)
-    }.reduce(_ + _)
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    // probes explode to (query, cluster) rows → EQUI-join on the cluster
-    // id (round 16 — the array_contains theta gate was a BNLJ scanning
-    // all |Q|·corpus code rows; see the ivfTopK candidate former)
-    val probeRows = qSide.select(col("query_id"), col("tables"),
-      explode(col("probes")).as("cluster"))
-    val shortlist = coded.join(broadcast(probeRows), Seq("cluster"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), approx.as("approx"))
-      .withColumn("arank", row_number().over(wApprox))
-      .where(col("arank") <= rerank)
-      .select("query_id", "vec_id")
-
-    val queries = queryBase(e, numQueries, queryTable)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+      }.toDF("query_id", "probes", "tables")
+        .select(col("query_id"), col("tables"), explode(col("probes")).as("cluster"))
+      coded.join(broadcast(probeRows), Seq("cluster"))
+        .where(col("vec_id") =!= col("query_id"))
+    }
   }
 
   /** ANN top-k via multi-table sign-LSH: candidates are corpus vectors
@@ -1783,10 +1746,7 @@ object Similarity {
       planesOverride: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
     val planes = planesOverride.getOrElse(hyperplanes(tables, bits, dim))
     // feeds bucketing, the query side, and the late vector rejoin
-    val e = OpCache.materialize(
-      Partitioning.ensureParallelism(embeddings, col("vec_id"))
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.l2Norm(col("v"))))
+    val e = OpCache.materialize(normedCorpus(embeddings))
 
     // bucket every vector once per table — ids only, so the `tables`×
     // explode and the bucket join never carry the 64-dim payload; vectors
@@ -1807,21 +1767,8 @@ object Similarity {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    val queries = e.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cands = candIds
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cands
-      .select(col("query_id"), col("vec_id"),
-        VectorOps.cosineWithNorms(
-          VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    val queries = e.where(col("vec_id") < numQueries).select(VecColumns.querySide: _*)
+    cosineTopK(candIds.join(e, "vec_id").join(broadcast(queries), "query_id"), k)
   }
 
   /** [[lshTopK]] over the md5-keyed [[mdHyperplanes]] — identical plan
@@ -2155,10 +2102,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val cents = publishedIvfCentroids(embeddings, baseDir, slug, nlist, iters)
-    val e = Partitioning.ensureParallelism(embeddings, col("vec_id"))
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-      .withColumn("nv", transform(col("v"), x => x / col("nrm")))
+    val e = withUnitVector(normedCorpus(embeddings))
     val best = probeStructs(col("nv"), cents, 1).getItem(0)
     val assigned = OpCache.materialize(e.select(col("vec_id"),
       best.getField("i").as("cluster"), best.getField("d").as("dt")))

@@ -71,7 +71,7 @@ class SimilaritySpec extends AnyFunSuite {
       df.select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.bruteForceTopK(emb))
-    val ivf = pairs(Similarity.ivfTopK(emb))
+    val ivf = pairs(Similarity.ivfTopK(emb, Similarity.trainIvfCentroids(emb)))
     val recall = (exact & ivf).size.toDouble / exact.size
     info(s"IVF recall@5 = $recall (${(exact & ivf).size}/${exact.size})")
     assert(recall >= 0.5, s"IVF recall@5 $recall below floor")
@@ -284,7 +284,7 @@ class SimilaritySpec extends AnyFunSuite {
       df.select("query_id", "vec_id", "cosine").collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val exact = byPair(Similarity.bruteForceTopK(emb))
-    val pq = byPair(Similarity.pqTopK(emb))
+    val pq = byPair(Similarity.pqTopK(emb, Similarity.trainPqCodebooks(emb, 8, 16, 3, 64)))
     val hit = exact.keySet & pq.keySet
     val recall = hit.size.toDouble / exact.size
     info(s"PQ recall@5 = $recall (${hit.size}/${exact.size})")
@@ -299,7 +299,8 @@ class SimilaritySpec extends AnyFunSuite {
       df.select("query_id", "vec_id", "cosine").collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val exact = byPair(Similarity.bruteForceTopK(emb))
-    val ivfpq = byPair(Similarity.ivfPqTopK(emb))
+    val ivfpq = byPair(Similarity.ivfPqTopK(emb, Similarity.trainIvfCentroids(emb),
+      Similarity.trainPqCodebooks(emb, 8, 16, 3, 64)))
     val hit = exact.keySet & ivfpq.keySet
     val recall = hit.size.toDouble / exact.size
     info(s"IVF+PQ recall@5 = $recall (${hit.size}/${exact.size})")
@@ -346,14 +347,16 @@ class SimilaritySpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long, Double)] =
       df.collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val cents = Similarity.trainIvfCentroids(emb)
+    val books = Similarity.trainPqCodebooks(emb, 8, 16, 3, 64)
     assert(rows(Similarity.bruteForceTopK(emb, queryTable = ext))
       === rows(Similarity.bruteForceTopK(emb)), "bruteForce diverged")
-    assert(rows(Similarity.ivfTopK(emb, queryTable = ext))
-      === rows(Similarity.ivfTopK(emb)), "ivf diverged")
-    assert(rows(Similarity.pqTopK(emb, queryTable = ext))
-      === rows(Similarity.pqTopK(emb)), "pq diverged")
-    assert(rows(Similarity.ivfPqTopK(emb, queryTable = ext))
-      === rows(Similarity.ivfPqTopK(emb)), "ivfpq diverged")
+    assert(rows(Similarity.ivfTopK(emb, cents, queryTable = ext))
+      === rows(Similarity.ivfTopK(emb, cents)), "ivf diverged")
+    assert(rows(Similarity.pqTopK(emb, books, queryTable = ext))
+      === rows(Similarity.pqTopK(emb, books)), "pq diverged")
+    assert(rows(Similarity.ivfPqTopK(emb, cents, books, queryTable = ext))
+      === rows(Similarity.ivfPqTopK(emb, cents, books)), "ivfpq diverged")
   }
 
   test("int8 quantization codes are in range and reconstruction error is bounded") {
@@ -622,7 +625,7 @@ class SimilaritySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.bruteForceTopK(emb))
     val cents = Similarity.publishedIvfCentroids(emb, base, "recall_spec")
-    val ivf = pairs(Similarity.ivfTopK(emb, centroids = Some(cents)))
+    val ivf = pairs(Similarity.ivfTopK(emb, cents))
     assert(got.keySet === exact.map(_._1))
     got.foreach { case (q, (hits, recall)) =>
       val expectHits = (exact & ivf).count(_._1 == q).toLong
@@ -869,5 +872,31 @@ class SimilaritySpec extends AnyFunSuite {
     radii.zip(radii.tail).foreach { case (a, b) =>
       assert(b <= a + 1e-12, s"radius grew: $a -> $b")
     }
+  }
+
+  test("the IVF candidate former is the only user of the probe scorers and the broadcast cap") {
+    val allowed = "src/main/scala/graft/operators/Similarity.scala"
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    // the scan must see the code it guards
+    assert(files.exists(_.getPath == allowed))
+    assert(files.exists(_.getPath == "src/main/scala/graft/operators/Graph.scala"))
+    val guarded = Seq("Similarity.probeStructs", "Similarity.hierProbeStructs",
+      "Similarity.MaxBroadcastProbeRows")
+    val offenders = files.filterNot(_.getPath == allowed).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try {
+        val text = src.mkString
+        guarded.exists(text.contains)
+      } finally src.close()
+    }.map(_.getPath)
+    assert(offenders.isEmpty,
+      "form IVF candidates through Similarity.ivfCandidates instead: " +
+        offenders.sorted.mkString(", "))
   }
 }
