@@ -104,6 +104,41 @@ object OpCache {
     out
   }
 
+  /** The rolling lineage cut of an iterative operator: the current
+    * checkpointed frame and the handle that frees its blocks. [[cut]]
+    * checkpoints the next frame FIRST (eagerly, so it no longer reads the
+    * current one) and THEN frees the frame it replaces, so a k-round loop
+    * holds one round's blocks, not k. The superseded frame is always freed
+    * through its handle: `Dataset.unpersist` cannot free a local
+    * checkpoint's internal RDD, and that breach once leaked one
+    * vocab-sized RDD per BPE merge round. The last frame backs the
+    * operator's result, so its handle goes to [[release]] ([[deferLast]])
+    * or is freed by the owner once the result is consumed ([[free]]).
+    * It starts empty, or adopts an already-checkpointed frame and its
+    * handle, which the first cut then frees.
+    */
+  final class RollingCut(
+      start: DataFrame = null, freeStart: () => Unit = () => ()) {
+    private var current = start
+    private var freeCurrent = freeStart
+
+    /** The frame of the latest cut (or the adopted start frame). */
+    def frame: DataFrame = current
+
+    def cut(next: DataFrame): DataFrame = {
+      val (out, free) = checkpointWithHandle(next)
+      freeCurrent()
+      current = out
+      freeCurrent = free
+      out
+    }
+
+    def deferLast(): Unit =
+      if (current != null) register(current.sparkSession, freeCurrent)
+
+    def free(): Unit = freeCurrent()
+  }
+
   /** Register an externally-created free (e.g. the handle of a checkpoint
     * that backs an operator's returned plan) for [[release]].
     */

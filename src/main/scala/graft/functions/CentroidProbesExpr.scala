@@ -65,6 +65,9 @@ case class CentroidProbesExpr(
 
   override def prettyName: String = "graft_centroid_probes"
 
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(nv, CentroidProbesExpr.render(cents), nprobe)
+
   override protected def nullSafeEval(input: Any): Any =
     CentroidProbesExpr.compute(input.asInstanceOf[ArrayData], cents, nprobe)
 
@@ -83,6 +86,20 @@ case class CentroidProbesExpr(
 }
 
 object CentroidProbesExpr {
+
+  /** Plan-text rendering of a matrix argument: its shape plus a content
+    * hash (`double[12x8]{5d1c07a2}`), the same in every JVM. The default
+    * rendering prints the array's identity hash, so two explains of one
+    * plan never matched. Equality and `semanticHash` are untouched.
+    */
+  def render(m: Array[Array[Double]]): String = {
+    val hash = java.util.Arrays.deepHashCode(m.asInstanceOf[Array[AnyRef]])
+    f"double[${m.length}x${m.headOption.fold(0)(_.length)}]{$hash%08x}"
+  }
+
+  /** [[render]] for an id vector: `int[12]{…}`. */
+  def render(a: Array[Int]): String =
+    f"int[${a.length}]{${java.util.Arrays.hashCode(a)}%08x}"
 
   /** Shared by interpreted eval and generated code (public + JVM-typed so
     * janino can call it). One fused pass: per centroid a sequential-fold

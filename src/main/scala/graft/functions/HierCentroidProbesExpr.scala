@@ -58,6 +58,11 @@ case class HierCentroidProbesExpr(
 
   override def prettyName: String = "graft_hier_centroid_probes"
 
+  override protected def stringArgs: Iterator[Any] = {
+    import CentroidProbesExpr.render
+    Iterator(nv, render(gcents), render(groupOf), render(cents), gprobe, nprobe)
+  }
+
   /** Member centroid ids per group, ascending — built once per plan, not
     * per row; rides the expression into the task binary like the
     * matrices themselves.

@@ -69,13 +69,12 @@ object Bpe {
     * deterministic in any engine.
     */
   def trainMerges(docs: DataFrame, numMerges: Int): Seq[Merge] = {
-    // checkpointWithHandle, NOT bare localCheckpoint + Dataset.unpersist:
-    // unpersist() only clears CacheManager entries, while localCheckpoint
-    // persists an INTERNAL RDD the Dataset API offers no release for —
-    // the bare form leaked one vocab-sized RDD per merge round on every
-    // cold training (caught by CacheSpec the first time a fresh
-    // environment trained the published table inside the suite)
-    var (words, freeWords) = OpCache.checkpointWithHandle(
+    // a rolling cut frees each superseded round through its handle (a bare
+    // localCheckpoint + Dataset.unpersist leaked one vocab-sized RDD per
+    // merge round on every cold training — caught by CacheSpec the first
+    // time a fresh environment trained the published table inside the suite)
+    val words = new OpCache.RollingCut()
+    words.cut(
       corpusWords(docs)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
         .where(col("freq") >= MinFreq)
@@ -88,7 +87,7 @@ object Bpe {
         val n = size(syms)
         val idx = when(n >= 2, sequence(lit(1), n - 1))
           .otherwise(array().cast("array<int>"))
-        val best = words
+        val best = words.frame
           .select(col("freq"), explode(transform(idx, i =>
             struct(element_at(syms, i).as("a"),
               element_at(syms, i + 1).as("b")))).as("p"))
@@ -101,14 +100,10 @@ object Bpe {
         val (a, b, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         out += Merge(r, a, b, cnt)
-        val (next, freeNext) = OpCache.checkpointWithHandle(
-          words.withColumn("ws", applyMerge(col("ws"), a, b)))
-        freeWords() // keep the k-round lineage flat, blocks freed per round
-        words = next
-        freeWords = freeNext
+        words.cut(words.frame.withColumn("ws", applyMerge(col("ws"), a, b)))
       }
       out.toSeq
-    } finally freeWords()
+    } finally words.free()
   }
 
   private def docsFingerprint(docs: DataFrame): PublishGuard.Fingerprint =

@@ -893,7 +893,9 @@ object Dedup {
         .toDF("u", "v")
         .repartition(parts, col("v")))
     freeP() // edges is self-contained; the pair blocks are superseded
-    var (labels, freeLabels) = OpCache.checkpointWithHandle(
+    // each round's labels supersede the previous round's
+    val cuts = new OpCache.RollingCut()
+    var labels = cuts.cut(
       edges.select(col("u")).distinct()
         .select(col("u"), col("u").as("lbl")))
     var iter = 0
@@ -902,20 +904,18 @@ object Dedup {
       val nbrMin = edges
         .join(labels.select(col("u").as("v"), col("lbl").as("nbr_lbl")), "v")
         .groupBy(col("u")).agg(min(col("nbr_lbl")).as("nbr_min"))
-      val (next, freeNext) = OpCache.checkpointWithHandle(
+      val next = cuts.cut(
         labels.join(nbrMin, Seq("u"), "left")
           .select(col("u"),
             least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"),
             (col("nbr_min") < col("lbl")).as("chg")))
       converged = next.where(col("chg")).isEmpty
-      freeLabels() // each round's labels supersede the previous round's
       labels = next.drop("chg")
-      freeLabels = freeNext
       iter += 1
     }
     freeEdges() // the returned plan reads only docs + the final labels
     // the final labels' blocks back the returned frame — release()-scoped
-    OpCache.defer(spark)(freeLabels)
+    cuts.deferLast()
     docs.select(col("doc_id"))
       .join(labels.select(col("u").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -15,13 +15,19 @@ import graft.functions.{OracleRound, VectorOps}
   * Scale design. Graph ops are join/agg chains over an edge list, so the
   * whole module is shuffle-bound by design and the job is to keep each
   * shuffle proportional to |E|:
-  *   - the edge lists are built once and `localCheckpoint`ed (lineage cut)
-  *     before any iterative use, so a k-round loop reads cached blocks
-  *     instead of re-deriving the o ⋈ l join k times;
-  *   - PageRank is the textbook "contributions" formulation — one
-  *     |E|-sized join + one partial-agg sum per round, with per-round
-  *     checkpoints so lineage stays O(1) (same discipline as the
-  *     connected-components loop in [[Dedup.clustersFromPairs]]);
+  *   - the iterative operators share one loop scaffold. [[loopEdges]] is
+  *     the one edge layout: a published adjacency streamed as is, or the
+  *     derived edge list `localCheckpoint`ed (lineage cut) and
+  *     pre-partitioned once, so a k-round loop reads cached blocks
+  *     instead of re-deriving the o ⋈ l join k times. [[NodeGate]] is the
+  *     one broadcast gate on the measured node count. An
+  *     [[OpCache.RollingCut]] checkpoints each loop's next state frame
+  *     and frees the one it replaces, so a loop holds one round's blocks;
+  *   - PageRank and its weighted and personalized variants share
+  *     [[rankWalk]], the textbook "contributions" formulation — one
+  *     |E|-sized join + one partial-agg sum per round, chained lazily
+  *     with a cut every 8 rounds (none at the 5-round defaults); reach
+  *     and sampled closeness share [[hopBfs]];
   *   - triangle counting uses the degree-ordered node-iterator: each
   *     undirected edge is oriented from its lower-(degree, id) endpoint to
   *     the higher one, which bounds per-node out-degree by O(√|E|) and so
@@ -398,10 +404,19 @@ object Graph {
   /** Node-count threshold of the "small dim" regime: at or below it the
     * loop operators broadcast their node-sized state frame per round and
     * stream the edge frame map-side; above it state co-partitions into
-    * the edge layout. One named constant so the six loop operators can
-    * never drift apart.
+    * the edge layout. Read only by [[NodeGate]], so the loop operators
+    * can never drift apart.
     */
   private[graft] val BroadcastNodeThreshold = 1000000L
+
+  /** The loop operators' one broadcast gate, decided once per call from
+    * the measured node count: `apply` broadcasts a node-sized state frame
+    * in the small-dim regime and leaves it to co-partition above.
+    */
+  private final case class NodeGate(nNodes: Long) {
+    val broadcasts: Boolean = nNodes <= BroadcastNodeThreshold
+    def apply(df: DataFrame): DataFrame = if (broadcasts) broadcast(df) else df
+  }
 
   /** A symmetrized, degree-annotated adjacency served from a PUBLISHED
     * table, with the publish-time facts every loop consumer otherwise
@@ -450,19 +465,10 @@ object Graph {
         "adjacency live inside the loop operators)")
     // the compute resolves the trade edges through the same memo
     // (nested PublishGuard.once — safe: builds run outside the map lock)
-    val (df, notes) = PublishGuard.sharedTableWithNotes(
-      orders.sparkSession, baseDir, "sym_adjacency", cacheKey, Nil,
-      tradeFingerprint(orders, lineitem),
-      "symmetrized trade adjacency table",
-      staged => Map(
-        "out_rows" -> staged.count().toString,
-        "out_nodes" -> staged.select(col("u")).distinct().count().toString))(
+    publishSymAdjacency(orders, lineitem, cacheKey, baseDir,
+      "sym_adjacency", "symmetrized trade adjacency table")(
       () => symDegAdjacency(
         sharedTradeEdges(orders, lineitem, cacheKey, baseDir)))
-    SymAdjacency(df,
-      notes.get("out_rows").map(_.toLong).getOrElse(df.count()),
-      notes.get("out_nodes").map(_.toLong)
-        .getOrElse(df.select(col("u")).distinct().count()))
   }
 
   /** [[symWeightedAdjacency]] published once per cacheKey — the weighted
@@ -473,59 +479,123 @@ object Graph {
       cacheKey: String, baseDir: String = ""): SymAdjacency = {
     require(cacheKey.nonEmpty,
       "sharedSymWeightedAdjacency needs a cache key")
+    publishSymAdjacency(orders, lineitem, cacheKey, baseDir,
+      "sym_adjacency_weighted", "symmetrized weighted trade adjacency table")(
+      () => symWeightedAdjacency(
+        sharedWeightedTradeEdges(orders, lineitem, cacheKey, baseDir)))
+  }
+
+  /** The publisher behind both shared adjacencies: the trade fingerprint
+    * pins the sidecar, whose notes carry the row and node counts.
+    */
+  private def publishSymAdjacency(
+      orders: DataFrame, lineitem: DataFrame, cacheKey: String,
+      baseDir: String, family: String, what: String)(
+      build: () => DataFrame): SymAdjacency = {
     val (df, notes) = PublishGuard.sharedTableWithNotes(
-      orders.sparkSession, baseDir, "sym_adjacency_weighted", cacheKey, Nil,
-      tradeFingerprint(orders, lineitem),
-      "symmetrized weighted trade adjacency table",
+      orders.sparkSession, baseDir, family, cacheKey, Nil,
+      tradeFingerprint(orders, lineitem), what,
       staged => Map(
         "out_rows" -> staged.count().toString,
         "out_nodes" -> staged.select(col("u")).distinct().count().toString))(
-      () => symWeightedAdjacency(
-        sharedWeightedTradeEdges(orders, lineitem, cacheKey, baseDir)))
+      build)
     SymAdjacency(df,
       notes.get("out_rows").map(_.toLong).getOrElse(df.count()),
       notes.get("out_nodes").map(_.toLong)
         .getOrElse(df.select(col("u")).distinct().count()))
   }
 
-  /** Resolve a loop operator's edge frame from either spelling.
+  /** A loop operator's edge frame laid out for its per-round join, the
+    * handle that frees it, and the broadcast gate on its node count.
+    */
+  private final case class LoopEdges(
+      edges: DataFrame, free: () => Unit, gate: NodeGate) {
+    /** The edge blocks back the returned lazy plan — release()-scoped. */
+    def deferFree(): Unit = OpCache.defer(edges.sparkSession)(free)
+  }
+
+  /** The loop operators' one edge layout, from either spelling.
     *
     * Published adjacency: in the broadcast regime the parquet table IS
     * the materialization — the loop streams it per round with no
     * per-call checkpoint, count, or distinct (the counts ride the
-    * sidecar); in the co-partition regime it repartitions + checkpoints
-    * ONCE into the layout the per-round join reuses. Inline: the
-    * original build (checkpoint the derived frame, size the layout off
-    * its count, re-cut pre-partitioned, measure n) — unchanged, so
-    * callers without a published table lose nothing.
-    * Returns (e, freeE, nNodes).
+    * sidecar); in the co-partition regime it repartitions on `u` +
+    * checkpoints ONCE into the layout the per-round join reuses. Inline:
+    * checkpoint the derived frame FIRST and size the layout off the cut
+    * frame's count (counting the raw frame would re-run its upstream
+    * derivation once more), re-cut it pre-partitioned on `key` — the
+    * per-round join key, `v` for [[components]] — free the first cut,
+    * and measure n. Loop parallelism is tied to |E| through
+    * [[Dedup.ccLoopPartitions]] (PlanSpec's fixed-parallelism guard).
     */
-  private def resolveLoopEdges(
-      inline: => DataFrame,
-      adjacency: Option[SymAdjacency]): (DataFrame, () => Unit, Long) =
+  private def loopEdges(
+      inline: => DataFrame, adjacency: Option[SymAdjacency] = None,
+      key: String = "u"): LoopEdges =
     adjacency match {
       case Some(adj) =>
-        if (adj.nNodes <= BroadcastNodeThreshold)
-          (adj.edges, () => (), adj.nNodes)
+        val gate = NodeGate(adj.nNodes)
+        if (gate.broadcasts) LoopEdges(adj.edges, () => (), gate)
         else {
           val parts = Dedup.ccLoopPartitions(adj.rows,
             adj.edges.sparkSession.sparkContext.defaultParallelism)
           val (e, freeE) = OpCache.checkpointWithHandle(
             adj.edges.repartition(parts, col("u")))
-          (e, freeE, adj.nNodes)
+          LoopEdges(e, freeE, gate)
         }
       case None =>
-        val frame = inline
-        val spark = frame.sparkSession
-        val (e0, freeE0) = OpCache.checkpointWithHandle(frame)
+        val (e0, freeE0) = OpCache.checkpointWithHandle(inline)
         val parts = Dedup.ccLoopPartitions(
-          e0.count(), spark.sparkContext.defaultParallelism)
+          e0.count(), e0.sparkSession.sparkContext.defaultParallelism)
         val (e, freeE) = OpCache.checkpointWithHandle(
-          e0.repartition(parts, col("u")))
+          e0.repartition(parts, col(key)))
         freeE0()
-        val n = e.select(col("u")).distinct().count()
-        (e, freeE, n)
+        LoopEdges(e, freeE, NodeGate(e.select(col("u")).distinct().count()))
     }
+
+  /** The plain symmetrized (u, v) layout of the BFS-shaped loops
+    * ([[reach]], [[closenessSampled]], [[betweennessSampled]]).
+    */
+  private def plainLoopEdges(
+      edges: DataFrame, adjacency: Option[SymAdjacency]): LoopEdges =
+    loopEdges(
+      edges.select(col("u"), col("v"))
+        .union(edges.select(col("v").as("u"), col("u").as("v"))),
+      adjacency.map(a => a.copy(edges = a.edges.select(col("u"), col("v")))))
+
+  /** A fixed-iteration walk needs NO per-round action (unlike the CC
+    * loop's convergence probe), so rank-walk rounds CHAIN LAZILY into one
+    * job of `iters` join+agg stages — per-round materialization was pure
+    * overhead (measured ~1 s/round at sf0.1). Lineage is cut every this
+    * many rounds so deep iteration counts can't overflow the planner; at
+    * the default 5 iterations the plan stays fully lazy.
+    */
+  private val RankCutEvery = 8
+
+  /** The walk loop of the three PageRank variants. Each round joins the
+    * rank frame onto the edges through the gate — broadcast in the
+    * small-dim regime, so the per-round join is map-side over the
+    * partitioned edge blocks; above it, co-partitioned into the edge
+    * layout — maps each edge row to its contribution `contrib` as `c`,
+    * and hands the (v, c) stream to the operator's `round` aggregate,
+    * which returns the next (u, rank) frame. The |E|-sized contribution
+    * stream collapses via MAP-SIDE partial aggregation before its
+    * exchange (no manual repartition — that would ship raw
+    * contributions). Returns (node, rank) rounded to 6 dp.
+    */
+  private def rankWalk(
+      e: LoopEdges, start: DataFrame, iters: Int, contrib: Column)(
+      round: DataFrame => DataFrame): DataFrame = {
+    val cuts = new OpCache.RollingCut()
+    var ranks = start
+    for (i <- 1 to iters) {
+      val next = round(
+        e.edges.join(e.gate(ranks), "u").select(col("v"), contrib.as("c")))
+      ranks = if (i % RankCutEvery == 0 && i < iters) cuts.cut(next) else next
+    }
+    e.deferFree()
+    cuts.deferLast()
+    ranks.select(col("u").as("node"), OracleRound.roundN(col("rank"), 6).as("rank"))
+  }
 
   /** Damped PageRank over the symmetrized edge list, a FIXED number of
     * iterations (fixed so the result is deterministic and
@@ -533,64 +603,24 @@ object Graph {
     * not to a result contract). Returns (node, rank) with rank rounded to
     * 6 dp.
     *
-    * Per round: one |E|-join of ranks onto the (checkpointed) out-degree-
+    * Per round ([[rankWalk]]): one |E|-join of ranks onto the out-degree-
     * annotated edge list, one partial-agg sum per destination — the
     * map-side combine does most of the work before the shuffle. Every node
     * in the symmetrized graph has out-degree ≥ 1, so there is no dangling
     * mass and the per-round mass total stays 1 (GraphSpec asserts it).
     */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-               checkpointEvery: Int = 8,
                adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
-    val spark = edges.sparkSession
-    // edge list annotated with source out-degree: published adjacency
-    // (zero per-call jobs — see resolveLoopEdges) or built once and
-    // lineage-cut pre-partitioned by source — in the co-partitioned
-    // (large graph) regime each round's join then exchanges only the
-    // node-sized rank frame; loop parallelism is tied to |E| (PlanSpec's
-    // fixed-parallelism guard)
-    val (e, freeE, n) = resolveLoopEdges(symDegAdjacency(edges), adjacency)
+    val e = loopEdges(symDegAdjacency(edges), adjacency)
+    val n = e.gate.nNodes
     val teleport = (1.0 - damping) / n
-    // a fixed-iteration loop needs NO per-round action (unlike the CC
-    // loop's convergence probe), so rounds CHAIN LAZILY into one job of
-    // `iters` join+agg stages — per-round materialization was pure
-    // overhead (measured ~1 s/round at sf0.1). Lineage is cut every
-    // `checkpointEvery` rounds so deep iteration counts can't overflow
-    // the planner; at the default 5 iterations the plan stays fully lazy.
-    //
-    // The rank frame is NODE-sized, and n is already measured: below the
-    // threshold it is explicitly broadcast (the "small dim" regime — the
-    // per-round join is then map-side over the partitioned edge blocks);
-    // above it, the join co-partitions ranks into e's layout. Either way
-    // the per-round |E|-sized contribution stream collapses via MAP-SIDE
-    // partial aggregation before its exchange (no manual repartition —
-    // that would ship raw contributions).
-    val broadcastRanks = n <= BroadcastNodeThreshold
-    var ranks = e.select(col("u")).distinct()
+    val start = e.edges.select(col("u")).distinct()
       .select(col("u"), lit(1.0 / n).as("rank"))
-    var freeRanks: () => Unit = () => ()
-    for (i <- 1 to iters) {
-      val rhs = if (broadcastRanks) broadcast(ranks) else ranks
-      val contribs = e.join(rhs, "u")
-        .select(col("v"), (col("rank") / col("deg")).as("c"))
-      var next = contribs.groupBy(col("v").as("u"))
+    rankWalk(e, start, iters, col("rank") / col("deg")) {
+      _.groupBy(col("v").as("u"))
         .agg((lit(teleport) + lit(damping) * sum(col("c"))).as("rank"))
-      if (i % checkpointEvery == 0 && i < iters) {
-        val (cut, freeNext) = OpCache.checkpointWithHandle(next)
-        freeRanks()
-        freeRanks = freeNext
-        next = cut
-      }
-      ranks = next
     }
-    val out = ranks.select(
-      col("u").as("node"), OracleRound.roundN(col("rank"), 6).as("rank"))
-    // the edge cache (and any mid-loop cut) backs the returned lazy plan —
-    // release()-scoped, same contract as the CC loop
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeRanks)
-    out
   }
 
   /** Weighted customer–supplier trade edges: weight = number of order
@@ -609,83 +639,64 @@ object Graph {
   /** Weighted PageRank: a walker at `u` crosses edge (u, v) with
     * probability w(u,v) / Σw(u, ·) — rank follows trade VOLUME, not mere
     * adjacency (a supplier with one huge customer ranks above one with
-    * many trivial ones). Same lazy fixed-iteration loop, broadcast
-    * small-dim regime, and map-side partial-agg collapse as
-    * [[pageRank]]; the edge cache additionally carries (w, wdeg).
+    * many trivial ones). Same [[rankWalk]] as [[pageRank]]; the edge
+    * cache additionally carries (w, wdeg).
     */
   def weightedPageRank(edges: DataFrame, iters: Int = 5,
       damping: Double = 0.85,
       adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(iters >= 1, "weightedPageRank needs at least one iteration")
-    val spark = edges.sparkSession
-    val (e, freeE, n) =
-      resolveLoopEdges(symWeightedAdjacency(edges), adjacency)
+    val e = loopEdges(symWeightedAdjacency(edges), adjacency)
+    val n = e.gate.nNodes
     val teleport = (1.0 - damping) / n
-    val broadcastRanks = n <= BroadcastNodeThreshold
-    var ranks = e.select(col("u")).distinct()
+    val start = e.edges.select(col("u")).distinct()
       .select(col("u"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val rhs = if (broadcastRanks) broadcast(ranks) else ranks
-      val contribs = e.join(rhs, "u")
-        .select(col("v"),
-          (col("rank") * col("w") / col("wdeg")).as("c"))
-      ranks = contribs.groupBy(col("v").as("u"))
+    rankWalk(e, start, iters, col("rank") * col("w") / col("wdeg")) {
+      _.groupBy(col("v").as("u"))
         .agg((lit(teleport) + lit(damping) * sum(col("c"))).as("rank"))
     }
-    OpCache.defer(spark)(freeE)
-    ranks.select(col("u").as("node"), OracleRound.roundN(col("rank"), 6).as("rank"))
   }
 
   /** Personalized PageRank (random walk with restart): teleport mass goes
     * only to the `sources` node set, so rank measures proximity TO THE
     * COHORT — the "related suppliers for this customer segment"
     * recommendation primitive, vs [[pageRank]]'s global centrality. Same
-    * lazy fixed-iteration contributions loop; the walk starts AT the
-    * sources (r0 = 1/|S| on S), so round-k frames only carry nodes within
-    * k hops — on power-law graphs that is quickly everything, but the
-    * early rounds stay cohort-sized. Returns (node, rank) rounded to 6 dp
-    * for every node reached within `iters` hops.
+    * [[rankWalk]]; the walk starts AT the sources (r0 = 1/|S| on S), so
+    * round-k frames only carry nodes within k hops — on power-law graphs
+    * that is quickly everything, but the early rounds stay cohort-sized.
+    * Returns (node, rank) rounded to 6 dp for every node reached within
+    * `iters` hops.
     */
   def personalizedPageRank(edges: DataFrame, sources: DataFrame,
       iters: Int = 5, damping: Double = 0.85,
       adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
-    val spark = edges.sparkSession
-    val (e, freeE, nNodes) =
-      resolveLoopEdges(symDegAdjacency(edges), adjacency)
+    val e = loopEdges(symDegAdjacency(edges), adjacency)
     // the source set is cohort-sized by definition — broadcast it; |S| is
     // a bounded driver pull like pageRank's n
-    val (src, freeSrc) = OpCache.checkpointWithHandle(
-      sources.select(col("u")).distinct())
+    val src = OpCache.checkpoint(sources.select(col("u")).distinct())
     val nS = src.count()
     require(nS > 0, "personalizedPageRank needs a non-empty source set")
     val teleport = (1.0 - damping) / nS
-    val broadcastRanks = nNodes <= BroadcastNodeThreshold
-    var ranks = src.select(col("u"), lit(1.0 / nS).as("rank"))
-    for (_ <- 1 to iters) {
-      val rhs = if (broadcastRanks) broadcast(ranks) else ranks
-      val contribs = e.join(rhs, "u")
-        .select(col("v"), (col("rank") / col("deg")).as("c"))
-      // teleport lands on every source EVEN IF it received no walk mass
-      // this round (a customer source in a bipartite graph gets walk mass
-      // only on even hops): the teleport rows enter the SAME aggregation
-      // as the walk contributions, tagged into their own column, so one
-      // group computes damping·Σc + Σt in a single exchange — round 18
-      // folded the old union + second re-aggregate (two exchanges per
-      // round) into this. Values are unchanged: a walk+teleport node is
-      // the identical 2-term IEEE sum, a teleport-only node sums zero
-      // walk mass, and a walk-only node adds +0.0 (exact for the
-      // positive damped sums here) — order-deterministic for the oracle
-      // either way.
-      ranks = contribs.select(col("v").as("u"), col("c"), lit(0.0).as("t"))
+    // teleport lands on every source EVEN IF it received no walk mass
+    // this round (a customer source in a bipartite graph gets walk mass
+    // only on even hops): the teleport rows enter the SAME aggregation
+    // as the walk contributions, tagged into their own column, so one
+    // group computes damping·Σc + Σt in a single exchange — round 18
+    // folded the old union + second re-aggregate (two exchanges per
+    // round) into this. Values are unchanged: a walk+teleport node is
+    // the identical 2-term IEEE sum, a teleport-only node sums zero
+    // walk mass, and a walk-only node adds +0.0 (exact for the
+    // positive damped sums here) — order-deterministic for the oracle
+    // either way.
+    rankWalk(e, src.select(col("u"), lit(1.0 / nS).as("rank")), iters,
+        col("rank") / col("deg")) {
+      _.select(col("v").as("u"), col("c"), lit(0.0).as("t"))
         .unionByName(src.select(col("u"), lit(0.0).as("c"),
           lit(teleport).as("t")))
         .groupBy(col("u"))
         .agg((lit(damping) * sum(col("c")) + sum(col("t"))).as("rank"))
     }
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeSrc)
-    ranks.select(col("u").as("node"), OracleRound.roundN(col("rank"), 6).as("rank"))
   }
 
   /** HITS (Kleinberg hubs & authorities) on the DIRECTED bipartite trade
@@ -698,51 +709,48 @@ object Graph {
     * oracle-replayable), scores rounded to 6 dp at the end only.
     *
     * Scale shape: the edge list checkpoints once; each half-round is one
-    * broadcast (node-sized score frame, same measured-n regime as
-    * [[pageRank]]) join + partial-agg sum; the L1 normalizers are
-    * single-row aggregates broadcast back over node-sized frames (the
-    * bounded crossJoin pattern). Output: (node, role ∈ {hub, authority},
-    * score).
+    * gated (node-sized score frame, the loop operators' [[NodeGate]])
+    * join + partial-agg sum; the L1 normalizers are single-row aggregates
+    * broadcast back over node-sized frames (the bounded crossJoin
+    * pattern). Output: (node, role ∈ {hub, authority}, score).
     */
   def hits(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val spark = edges.sparkSession
-    val (e, freeE) = OpCache.checkpointWithHandle(edges.select(col("u"), col("v")))
+    val e = OpCache.checkpoint(edges.select(col("u"), col("v")))
     // both exact distinct counts in ONE job (two aggregates over one scan
     // via Expand) — they were two sequential count jobs (round 18)
     val cnt = e.agg(count_distinct(col("u")).as("nu"),
       count_distinct(col("v")).as("nv")).head()
     val nHubs = cnt.getLong(0)
-    val nNodes = nHubs + cnt.getLong(1)
-    val broadcastScores = nNodes <= BroadcastNodeThreshold
-    def bc(df: DataFrame): DataFrame = if (broadcastScores) broadcast(df) else df
+    val gate = NodeGate(nHubs + cnt.getLong(1))
     // the raw in-flow frame feeds BOTH the L1 normalizer aggregate and
     // the division — left lazy, each of the two references re-derives the
     // whole upstream, QUADRUPLING the plan per round (4^iters copies of
     // the base join — the first cut hung at sf0.01). The frames are
-    // node-sized, so a per-round lineage cut is cheap and makes each
-    // round read the previous round's cached blocks exactly once.
+    // node-sized, so a per-round lineage cut (one rolling cut per role)
+    // is cheap and makes each round read the previous round's cached
+    // blocks exactly once.
     // (Round 18 A/B, rejected: a whole-frame window sum normalizer —
     // lazy, no per-half-round cut — measured 7.0 s vs 5.0 s on a quiet
     // window; the 10 chained single-partition window stages cost more
     // than the checkpoints they replaced.)
-    val frees = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    def l1(df: DataFrame, key: String): DataFrame = {
-      val (raw, freeRaw) = OpCache.checkpointWithHandle(df)
-      frees += freeRaw
+    def l1(cuts: OpCache.RollingCut, df: DataFrame, key: String): DataFrame = {
+      val raw = cuts.cut(df)
       val total = raw.agg(sum(col("x")).as("t"))
       raw.crossJoin(broadcast(total)).select(col(key), (col("x") / col("t")).as("s"))
     }
+    val hubCuts = new OpCache.RollingCut()
+    val authCuts = new OpCache.RollingCut()
     var hubs = e.select(col("u")).distinct().select(col("u"), lit(1.0 / nHubs).as("s"))
     var auths: DataFrame = null
     for (_ <- 1 to iters) {
-      auths = l1(
-        e.join(bc(hubs), "u").groupBy(col("v")).agg(sum(col("s")).as("x")), "v")
-      hubs = l1(
-        e.join(bc(auths), "v").groupBy(col("u")).agg(sum(col("s")).as("x")), "u")
+      auths = l1(authCuts,
+        e.join(gate(hubs), "u").groupBy(col("v")).agg(sum(col("s")).as("x")), "v")
+      hubs = l1(hubCuts,
+        e.join(gate(auths), "v").groupBy(col("u")).agg(sum(col("s")).as("x")), "u")
     }
-    OpCache.defer(spark)(freeE)
-    frees.foreach(OpCache.defer(spark))
+    authCuts.deferLast()
+    hubCuts.deferLast()
     hubs.select(col("u").as("node"), lit("hub").as("role"),
         OracleRound.roundN(col("s"), 6).as("score"))
       .unionByName(auths.select(col("v").as("node"), lit("authority").as("role"),
@@ -776,7 +784,6 @@ object Graph {
     * Output: (part_key, triangles) for every part in ≥ 1 triangle.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
     // the edge list feeds degree counting, both wedge sides, the closing
     // join AND the wedge Bloom filter — materialize once (lineage cut)
     val (e, freeE) = OpCache.checkpointWithHandle(edges.select(col("p1"), col("p2")))
@@ -795,7 +802,7 @@ object Graph {
       .select(col("p1"), col("p2"),
         rank(col("dg1"), col("p1")).as("r1"),
         rank(col("dg2"), col("p2")).as("r2"))
-    val (oriented, freeOri) = OpCache.checkpointWithHandle(withRanks.select(
+    val oriented = OpCache.checkpoint(withRanks.select(
       when(col("r1") < col("r2"), col("p1")).otherwise(col("p2")).as("src"),
       when(col("r1") < col("r2"), col("p2")).otherwise(col("p1")).as("dst"),
       greatest(col("r1"), col("r2")).as("dst_rank")))
@@ -820,7 +827,6 @@ object Graph {
     // is how the wedge ordered (b, c) — one equi-join, no disjunction
     val triangles = prunedWedges.join(
       oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
-    OpCache.defer(spark)(freeOri)
     triangles
       .select(explode(array(col("a"), col("b"), col("c"))).as("part_key"))
       .groupBy(col("part_key")).agg(count(lit(1)).as("triangles"))
@@ -867,53 +873,44 @@ object Graph {
     * the rounds instead of running reachability (whose pair set is
     * O(n·|component|) — infeasible on a graph with a giant component).
     *
-    * Same loop regime as [[pageRank]] — edge blocks checkpointed once and
-    * pre-partitioned, the node-sized label frame broadcast below the
-    * measured threshold, per-round neighbor-min collapsing map-side before
-    * its exchange — EXCEPT the checkpoint cadence: each round's broadcast
+    * Same loop regime as [[pageRank]] — the shared edge layout
+    * ([[loopEdges]], pre-partitioned on the probe key `v`), the
+    * node-sized label frame through the [[NodeGate]], per-round
+    * neighbor-min collapsing map-side before its exchange — EXCEPT the
+    * checkpoint cadence, [[ComponentsCutEvery]].
+    */
+  def components(edges: DataFrame, iters: Int = 10): DataFrame = {
+    require(iters >= 1, "components needs at least one iteration")
+    val e = loopEdges(
+      edges.select(col("p1").as("u"), col("p2").as("v"))
+        .union(edges.select(col("p2"), col("p1"))),
+      key = "v")
+    val cuts = new OpCache.RollingCut()
+    var labels = e.edges.select(col("u")).distinct()
+      .select(col("u"), col("u").as("lbl"))
+    for (i <- 1 to iters) {
+      val nbrMin = e.edges
+        .join(e.gate(labels).select(col("u").as("v"), col("lbl").as("xl")), "v")
+        .groupBy(col("u")).agg(min(col("xl")).as("nm"))
+      // inner join: the symmetric edge list gives every node ≥ 1 neighbor
+      val next = labels.join(nbrMin, Seq("u"))
+        .select(col("u"), least(col("lbl"), col("nm")).as("lbl"))
+      labels =
+        if (i % ComponentsCutEvery == 0 && i < iters) cuts.cut(next) else next
+    }
+    val out = labels.select(col("u").as("part_key"), col("lbl").as("component"))
+    e.deferFree()
+    cuts.deferLast()
+    out
+  }
+
+  /** The [[components]] checkpoint cadence: each round's broadcast
     * EXECUTES its lazy prefix, so at 10 rounds a long-lazy chain re-runs
     * earlier rounds quadratically (measured at sf0.1: 12.7 s cutting
     * every 8 rounds, 6.2 s every 2, 4.2 s every round — PageRank at 5
     * rounds sits below the crossover, 10 rounds is well past it).
     */
-  def components(
-      edges: DataFrame, iters: Int = 10, checkpointEvery: Int = 1): DataFrame = {
-    require(iters >= 1, "components needs at least one iteration")
-    val spark = edges.sparkSession
-    val sym = edges.select(col("p1").as("u"), col("p2").as("v"))
-      .union(edges.select(col("p2"), col("p1")))
-    val (e0, freeE0) = OpCache.checkpointWithHandle(sym)
-    val parts = Dedup.ccLoopPartitions(
-      e0.count(), spark.sparkContext.defaultParallelism)
-    val (e, freeE) = OpCache.checkpointWithHandle(
-      e0.repartition(parts, col("v")))
-    freeE0()
-    val n = e.select(col("u")).distinct().count()
-    val broadcastLabels = n <= 1000000L
-    var labels = e.select(col("u")).distinct()
-      .select(col("u"), col("u").as("lbl"))
-    var freeLabels: () => Unit = () => ()
-    for (i <- 1 to iters) {
-      val rhs = if (broadcastLabels) broadcast(labels) else labels
-      val nbrMin = e
-        .join(rhs.select(col("u").as("v"), col("lbl").as("xl")), "v")
-        .groupBy(col("u")).agg(min(col("xl")).as("nm"))
-      // inner join: the symmetric edge list gives every node ≥ 1 neighbor
-      var next = labels.join(nbrMin, Seq("u"))
-        .select(col("u"), least(col("lbl"), col("nm")).as("lbl"))
-      if (i % checkpointEvery == 0 && i < iters) {
-        val (cut, freeNext) = OpCache.checkpointWithHandle(next)
-        freeLabels()
-        freeLabels = freeNext
-        next = cut
-      }
-      labels = next
-    }
-    val out = labels.select(col("u").as("part_key"), col("lbl").as("component"))
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeLabels)
-    out
-  }
+  private val ComponentsCutEvery = 1
 
   /** k-core decomposition by FIXED-iteration peeling: each round drops
     * every node whose CURRENT degree is below `k` and restricts the edge
@@ -935,36 +932,22 @@ object Graph {
   def kCore(
       edges: DataFrame, k: Int = 2, iters: Int = 10): DataFrame = {
     require(k >= 1 && iters >= 1, "kCore needs k >= 1 and iters >= 1")
-    val spark = edges.sparkSession
-    val sym = edges.select(col("p1").as("u"), col("p2").as("v"))
-      .union(edges.select(col("p2"), col("p1")))
-    // checkpoint FIRST, then count the cut frame to size the loop
-    // partitions (the components cadence) — counting the raw union would
-    // re-run the upstream edge derivation (distinct + self-join + support
-    // agg for the basket graph) once more before the checkpoint
-    val (e0, freeE0) = OpCache.checkpointWithHandle(sym)
-    val parts = Dedup.ccLoopPartitions(
-      e0.count(), spark.sparkContext.defaultParallelism)
-    var (e, freeE) = OpCache.checkpointWithHandle(
-      e0.repartition(parts, col("u")))
-    freeE0()
-    val broadcastKeep =
-      e.select(col("u")).distinct().count() <= 1000000L
+    val layout = loopEdges(
+      edges.select(col("p1").as("u"), col("p2").as("v"))
+        .union(edges.select(col("p2"), col("p1"))))
+    // the surviving edge set replaces the layout round by round
+    val e = new OpCache.RollingCut(layout.edges, layout.free)
     for (_ <- 1 to iters) {
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("dg"))
+      val keep = e.frame.groupBy(col("u")).agg(count(lit(1)).as("dg"))
         .where(col("dg") >= k).select(col("u"))
-      val kb = if (broadcastKeep) broadcast(keep) else keep
-      val next = e.join(kb, Seq("u"))
+      val kb = layout.gate(keep)
+      e.cut(e.frame.join(kb, Seq("u"))
         .join(kb.select(col("u").as("v")), Seq("v"))
-        .select(col("u"), col("v"))
-      val (cut, freeNext) = OpCache.checkpointWithHandle(next)
-      freeE()
-      e = cut
-      freeE = freeNext
+        .select(col("u"), col("v")))
     }
-    val out = e.groupBy(col("u").as("part_key"))
+    val out = e.frame.groupBy(col("u").as("part_key"))
       .agg(count(lit(1)).as("core_degree"))
-    OpCache.defer(spark)(freeE)
+    e.deferLast()
     out
   }
 
@@ -974,63 +957,66 @@ object Graph {
     * The supply-chain / blast-radius question users ask of a trade graph:
     * "everything within k relationships of this cohort".
     *
-    * Classic frontier BFS with the [[components]]/[[kCore]] loop
-    * discipline: the edge frame is checkpointed once and pre-partitioned
-    * on the probe key; each round is ONE edge⋈frontier equi-join (the
-    * node-sized frontier broadcast below the measured threshold,
-    * co-partitioned above), a distinct, and an anti-join against the
-    * visited set — per-round lineage cuts keep round r from re-running
-    * rounds 1..r−1. A node joins `visited` the FIRST round it appears and
-    * the anti-join bars re-entry, so its hop count is the BFS layer = min
-    * distance, each node exactly once. Fixed rounds (oracle-unrollable,
-    * like [[components]]) with an early exit when a frontier empties —
-    * sound because an empty frontier can never produce a later one, so
-    * the remaining rounds are no-ops by construction.
+    * Frontier BFS ([[hopBfs]]) over the plain symmetrized edge layout.
     */
   def reach(edges: DataFrame, sources: DataFrame, maxHops: Int = 3,
       adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(maxHops >= 1, "reach needs at least one hop")
-    val spark = edges.sparkSession
-    val (e, freeE, nNodes) = resolveLoopEdges(
-      edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v"))),
-      adjacency.map(a => a.copy(edges = a.edges.select(col("u"), col("v")))))
-    val broadcastNodes = nNodes <= BroadcastNodeThreshold
-    def bc(df: DataFrame): DataFrame = if (broadcastNodes) broadcast(df) else df
+    hopBfs(plainLoopEdges(edges, adjacency),
+      sources.select(col("node"), lit(0).as("hops")).distinct(), Nil, maxHops)
+  }
 
-    var (visited, freeVisited) = OpCache.checkpointWithHandle(
-      sources.select(col("node"), lit(0).as("hops")).distinct())
-    var frontier = visited.select(col("node"))
+  /** Hop-bounded frontier BFS over (keys…, node, hops) state, shared by
+    * [[reach]] (no key) and [[closenessSampled]] (keyed by `src`, so a
+    * cohort's frontiers advance TOGETHER in one frame — k sources cost
+    * one joined frontier per round, not k runs). `start` holds the
+    * hop-0 rows.
+    *
+    * The [[components]]/[[kCore]] loop discipline: the edge frame is laid
+    * out once, pre-partitioned on the probe key; each round is ONE
+    * edge⋈frontier equi-join (the node-sized frontier through the
+    * [[NodeGate]]), a distinct, and an anti-join against the visited set
+    * — a rolling lineage cut per round keeps round r from re-running
+    * rounds 1..r−1. A node joins `visited` the FIRST round it appears
+    * and the anti-join bars re-entry, so its hop count is the BFS layer
+    * = min distance, each node exactly once per key. Fixed rounds
+    * (oracle-unrollable, like [[components]]) with an early exit when a
+    * frontier empties — sound because an empty frontier can never
+    * produce a later one, so the remaining rounds are no-ops by
+    * construction.
+    */
+  private def hopBfs(
+      e: LoopEdges, start: DataFrame, keys: Seq[String],
+      maxHops: Int): DataFrame = {
+    val k = keys.map(col)
+    val visited = new OpCache.RollingCut()
+    visited.cut(start)
     var h = 1
     var drained = false
     while (h <= maxHops && !drained) {
-      val nbrs = e.join(bc(frontier.select(col("node").as("u"))), Seq("u"))
-        .select(col("v").as("node")).distinct()
+      val frontier = visited.frame.where(col("hops") === h - 1)
+        .select(k :+ col("node").as("u"): _*)
+      val nbrs = e.edges.join(e.gate(frontier), Seq("u"))
+        .select(k :+ col("v").as("node"): _*).distinct()
       val fresh = nbrs
-        .join(bc(visited.select(col("node"))), Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("hops"))
-      val (vNext, freeNext) = OpCache.checkpointWithHandle(
-        visited.unionByName(fresh))
-      freeVisited()
-      visited = vNext
-      freeVisited = freeNext
-      frontier = visited.where(col("hops") === h).select(col("node"))
-      // one node-sized count on the already-checkpointed frame
-      drained = frontier.limit(1).count() == 0L
+        .join(e.gate(visited.frame.select(k :+ col("node"): _*)),
+          keys :+ "node", "left_anti")
+        .select(k :+ col("node") :+ lit(h).as("hops"): _*)
+      visited.cut(visited.frame.unionByName(fresh))
+      // one node-sized probe on the already-checkpointed frame
+      drained = visited.frame.where(col("hops") === h).limit(1).count() == 0L
       h += 1
     }
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeVisited)
-    visited
+    e.deferFree()
+    visited.deferLast()
+    visited.frame
   }
 
   /** Harmonic closeness centrality from a SAMPLED source cohort — the
     * tractable form of closeness at scale (exact closeness needs
     * all-pairs distances; sampling sources is the standard estimator,
     * and per-source results are exact): per source, a hop-bounded BFS
-    * (the [[reach]] loop, keyed by (src, node) so the cohort's
-    * frontiers advance TOGETHER in one frame — k sources cost one
-    * joined frontier per round, not k runs), then
+    * ([[hopBfs]] keyed by (src, node)), then
     * harmonic = Σ_h n_h / h over the per-hop reach counts.
     *
     * Determinism: the harmonic sum is a FIXED-ORDER expression over
@@ -1047,38 +1033,10 @@ object Graph {
       edges: DataFrame, sources: DataFrame, maxHops: Int = 3,
       adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(maxHops >= 1, "closeness needs at least one hop")
-    val spark = edges.sparkSession
-    val (e, freeE, nNodes) = resolveLoopEdges(
-      edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v"))),
-      adjacency.map(a => a.copy(edges = a.edges.select(col("u"), col("v")))))
-    val broadcastNodes = nNodes <= BroadcastNodeThreshold
-    def bc(df: DataFrame): DataFrame = if (broadcastNodes) broadcast(df) else df
-
-    var (visited, freeVisited) = OpCache.checkpointWithHandle(
+    val visited = hopBfs(plainLoopEdges(edges, adjacency),
       sources.select(col("src"), col("src").as("node"), lit(0).as("hops"))
-        .distinct())
-    var h = 1
-    var drained = false
-    while (h <= maxHops && !drained) {
-      val frontier = visited.where(col("hops") === h - 1)
-        .select(col("src"), col("node").as("u"))
-      val nbrs = e.join(bc(frontier), Seq("u"))
-        .select(col("src"), col("v").as("node")).distinct()
-      val fresh = nbrs
-        .join(bc(visited.select(col("src"), col("node"))),
-          Seq("src", "node"), "left_anti")
-        .select(col("src"), col("node"), lit(h).as("hops"))
-      val (vNext, freeNext) = OpCache.checkpointWithHandle(
-        visited.unionByName(fresh))
-      freeVisited()
-      visited = vNext
-      freeVisited = freeNext
-      drained = visited.where(col("hops") === h).limit(1).count() == 0L
-      h += 1
-    }
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeVisited)
+        .distinct(),
+      Seq("src"), maxHops)
     val hopCounts = (1 to maxHops).map(d =>
       sum(when(col("hops") === d, 1L).otherwise(0L)).as(s"n$d"))
     val harmonic = (1 to maxHops)
@@ -1127,34 +1085,26 @@ object Graph {
       edges: DataFrame, sources: DataFrame, maxHops: Int = 3,
       adjacency: Option[SymAdjacency] = None): DataFrame = {
     require(maxHops >= 2, "betweenness needs at least two hops")
-    val spark = edges.sparkSession
-    val (e, freeE, nNodes) = resolveLoopEdges(
-      edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v"))),
-      adjacency.map(a => a.copy(edges = a.edges.select(col("u"), col("v")))))
-    val broadcastNodes = nNodes <= BroadcastNodeThreshold
-    def bc(df: DataFrame): DataFrame = if (broadcastNodes) broadcast(df) else df
+    val e = plainLoopEdges(edges, adjacency)
 
     // forward: (src, node, hops, sigma) with sigma the shortest-path count
-    var (visited, freeVisited) = OpCache.checkpointWithHandle(
+    val levels = new OpCache.RollingCut()
+    levels.cut(
       sources.select(col("src"), col("src").as("node"), lit(0).as("hops"),
         lit(1L).as("sigma")).distinct())
     (1 to maxHops).foreach { h =>
-      val frontier = visited.where(col("hops") === h - 1)
+      val frontier = levels.frame.where(col("hops") === h - 1)
         .select(col("src"), col("node").as("u"), col("sigma"))
-      val cand = e.join(bc(frontier), Seq("u"))
+      val cand = e.edges.join(e.gate(frontier), Seq("u"))
         .groupBy(col("src"), col("v").as("node"))
         .agg(sum(col("sigma")).as("sigma"))
       val fresh = cand
-        .join(bc(visited.select(col("src"), col("node"))),
+        .join(e.gate(levels.frame.select(col("src"), col("node"))),
           Seq("src", "node"), "left_anti")
         .select(col("src"), col("node"), lit(h).as("hops"), col("sigma"))
-      val (vNext, freeNext) = OpCache.checkpointWithHandle(
-        visited.unionByName(fresh))
-      freeVisited()
-      visited = vNext
-      freeVisited = freeNext
+      levels.cut(levels.frame.unionByName(fresh))
     }
+    val visited = levels.frame
 
     // backward: δ per level, H−1 → 1 (hop-H nodes seed δ = 0; the DAG
     // only links consecutive levels, so each round joins two level
@@ -1176,7 +1126,7 @@ object Graph {
       val cur = visited.where(col("hops") === h)
         .select(col("src"), col("node"), col("sigma"))
       val terms = cur.as("c")
-        .join(e, col("c.node") === col("u"))
+        .join(e.edges, col("c.node") === col("u"))
         .join(deltaNext.as("w"),
           col("v") === col("w.node") && col("c.src") === col("w.src"))
         .select(col("c.src").as("src"), col("c.node").as("node"),
@@ -1185,17 +1135,16 @@ object Graph {
             lit(1e9) + lit(0.5)).cast("long").as("term_sc"))
       val folded = terms.groupBy(col("src"), col("node"))
         .agg(sum(col("term_sc")).as("delta_sc"))
-      val (dNext, freeD) = OpCache.checkpointWithHandle(
+      val dNext = OpCache.checkpoint(
         cur.join(folded, Seq("src", "node"), "left")
           .select(col("src"), col("node"), col("sigma"),
             coalesce(col("delta_sc"), lit(0L)).as("delta_sc")))
-      OpCache.defer(spark)(freeD)
       deltaNext = dNext
       allDeltas = allDeltas.unionByName(
         dNext.select(col("src"), col("node"), col("delta_sc")))
     }
-    OpCache.defer(spark)(freeE)
-    OpCache.defer(spark)(freeVisited)
+    e.deferFree()
+    levels.deferLast()
 
     // bc(v) = Σ over sources of δ_sc, still exact in longs; the 6-dp
     // output grain is integer floor-division (δ_sc grains are 1e-9, the
@@ -1229,13 +1178,9 @@ object Graph {
     * convention. The ratio is one IEEE division of exactly-represented
     * integers, rounded to 6 dp on both engines — cross-engine exact.
     */
-  def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val (e, freeE) = OpCache.checkpointWithHandle(edges.select(col("p1"), col("p2")))
-    val out = clusteringFromStats(nodeTriangleStats(e))
-    OpCache.defer(spark)(freeE)
-    out
-  }
+  def clusteringCoefficients(edges: DataFrame): DataFrame =
+    clusteringFromStats(nodeTriangleStats(
+      OpCache.checkpoint(edges.select(col("p1"), col("p2")))))
 
   /** (part_key, degree, triangles) for every node of the undirected
     * (p1 < p2) edge list — the node-grain telemetry frame that BOTH
@@ -1278,17 +1223,17 @@ object Graph {
     *
     * Scale shape: per round one |E|-sized label join + a (node, label)
     * partial-agg + a node-partitioned window — the PageRank loop's cost
-    * envelope; `localCheckpoint` per round cuts the lineage (the frame
+    * envelope; a rolling cut per round cuts the lineage (the frame
     * is consumed twice per round — neighbor join + self-vote union — so
     * lazy chaining would re-run earlier rounds quadratically, the
     * recorded components fix). Communities REFINE connected components
     * (co-labeled ⇒ connected; GraphSpec checks on real data).
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-    val (e, freeE) = OpCache.checkpointWithHandle(edges.select(col("p1"), col("p2")))
+    val e = OpCache.checkpoint(edges.select(col("p1"), col("p2")))
     val adj = e.select(col("p1").as("v"), col("p2").as("n"))
       .unionByName(e.select(col("p2").as("v"), col("p1").as("n")))
+    val cuts = new OpCache.RollingCut()
     var labels = adj.select(col("v")).distinct()
       .withColumn("lab", col("v"))
     (1 to iters).foreach { _ =>
@@ -1299,14 +1244,12 @@ object Graph {
         .groupBy(col("v"), col("lab")).agg(count(lit(1)).as("c"))
       val w = Window.partitionBy(col("v"))
         .orderBy(col("c").desc, col("lab"))
-      val (cut, freeCut) = OpCache.checkpointWithHandle(
+      labels = cuts.cut(
         votes.withColumn("rn", row_number().over(w))
           .where(col("rn") === 1)
           .select(col("v"), col("lab")))
-      labels = cut
-      OpCache.defer(spark)(freeCut)
     }
-    OpCache.defer(spark)(freeE)
+    cuts.deferLast()
     labels.select(col("v").as("part_key"), col("lab").as("community"))
   }
 
@@ -1333,8 +1276,7 @@ object Graph {
     */
   def adamicAdar(
       edges: DataFrame, maxDegree: Long = 128, k: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
-    val (e, freeE) = OpCache.checkpointWithHandle(edges.select(col("p1"), col("p2")))
+    val e = OpCache.checkpoint(edges.select(col("p1"), col("p2")))
     val adj = e.select(col("p1").as("v"), col("p2").as("n"))
       .unionByName(e.select(col("p2").as("v"), col("p1").as("n")))
     val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -1354,13 +1296,11 @@ object Graph {
         OracleRound.roundN(
           aggregate(sort_array(collect_list(col("vt"))), lit(0.0),
             (acc, s) => acc + s.getField("t")), 6).as("aa_score"))
-    val out = scored
+    scored
       .join(e.select(col("p1").as("u"), col("p2").as("w")),
         Seq("u", "w"), "left_anti")
       .orderBy(col("aa_score").desc, col("u"), col("w"))
       .limit(k)
-    OpCache.defer(spark)(freeE)
-    out
   }
 
   /** [[nodeTriangleStats]] of the co-purchase graph computed ONCE per
@@ -1646,7 +1586,6 @@ object Graph {
       warmStart: Option[DataFrame] = None): DataFrame = {
     require(dim >= 1 && iters >= 1, "dim and iters must be positive")
     require(miniBatches >= 1, "miniBatches must be >= 1")
-    val spark = pairs.sparkSession
     val ex = OpCache.materialize(
       sgnsExamples(pairs, negatives, salt)
         .withColumn("fold",
@@ -1677,11 +1616,10 @@ object Graph {
     // stats estimation turns into million-digit BigInteger products on
     // the driver by round ~20); freshFrame resets the estimate per round
     // at zero data cost (see GraftBridge.freshFrame)
-    def cutState(df: DataFrame): (DataFrame, () => Unit) = {
-      val (cp, free) = OpCache.checkpointWithHandle(df)
-      (org.apache.spark.sql.GraftBridge.freshFrame(cp), free)
-    }
-    var (emb, freeEmb) = cutState(init)
+    val cuts = new OpCache.RollingCut()
+    def cutState(df: DataFrame): DataFrame =
+      org.apache.spark.sql.GraftBridge.freshFrame(cuts.cut(df))
+    var emb = cutState(init)
     (1 to iters).foreach { it =>
       val exIter =
         if (miniBatches <= 1) ex
@@ -1732,15 +1670,12 @@ object Graph {
         .select(col("node"),
           zip_with(col("v"), coalesce(col("gmean"), zeros),
             (v, g) => v - lit(lr) * g).as("v"))
-      val (nextCp, freeNext) = cutState(next)
-      freeEmb()
-      emb = nextCp
-      freeEmb = freeNext
+      emb = cutState(next)
     }
     val out = emb.select(col("node"), col("v").as("vec"))
     // the final checkpoint's blocks back the returned plan — free them
     // with the operator-cache sweep, not before
-    OpCache.defer(spark)(freeEmb)
+    cuts.deferLast()
     out
   }
 

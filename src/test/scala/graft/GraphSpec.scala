@@ -1154,4 +1154,42 @@ class GraphSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(at2 === out.toMap, "extra rounds changed already-assigned labels")
   }
+
+  test("labelPropagation and hits hold only their final frames until release") {
+    import spark.implicits._
+    graft.engine.OpCache.release(spark)
+    def held = spark.sparkContext.getPersistentRDDs.size
+    val base = held
+    val basket = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L),
+      (4L, 5L), (4L, 6L), (5L, 6L)).toDF("p1", "p2")
+    Graph.labelPropagation(basket, iters = 5).collect()
+    // the checkpointed edges and the final labels
+    assert(held - base <= 2, s"labelPropagation holds ${held - base} frames")
+    graft.engine.OpCache.release(spark)
+    assert(held === base)
+    val trade = Seq(("c:1", "s:1"), ("c:1", "s:2"), ("c:2", "s:1"))
+      .toDF("u", "v")
+    Graph.hits(trade, iters = 5).collect()
+    // the checkpointed edges and the final hub and authority frames
+    assert(held - base <= 3, s"hits holds ${held - base} frames")
+    graft.engine.OpCache.release(spark)
+    assert(held === base)
+  }
+
+  test("the loop operators share one broadcast gate on BroadcastNodeThreshold") {
+    val path = "src/main/scala/graft/operators/Graph.scala"
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    val text = try src.mkString finally src.close()
+    // the scan must see the code it guards
+    assert(text.contains("val BroadcastNodeThreshold"))
+    val comparisons = raw"(<=|>=|<|>|==|!=)\s*BroadcastNodeThreshold\b|\bBroadcastNodeThreshold\s*(<=|>=|<|>|==|!=)"
+      .r.findAllIn(text).size
+    assert(comparisons === 1,
+      s"$comparisons comparisons against BroadcastNodeThreshold — gate through NodeGate")
+    // the threshold's own definition is the one place its value is written
+    val literals = "1000000L".r.findAllIn(text).size
+    val definitions = "BroadcastNodeThreshold = 1000000L".r.findAllIn(text).size
+    assert(definitions === 1 && literals === 1,
+      s"$literals 1000000L literals — compare against BroadcastNodeThreshold instead")
+  }
 }

@@ -795,6 +795,10 @@ class OperatorsSpec extends AnyFunSuite {
         }
       } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
+    // plan text renders the matrix by shape and content, not JVM identity
+    val nvAttr = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("nv")
+    assert(graft.functions.CentroidProbesExpr(nvAttr, cents.map(_.clone), 4).toString ===
+      graft.functions.CentroidProbesExpr(nvAttr, cents.map(_.clone), 4).toString)
     // the parameter contract fails loudly
     intercept[IllegalArgumentException] {
       Similarity.probeStructs(col("nv"), cents, nlist + 1)
@@ -945,6 +949,11 @@ class OperatorsSpec extends AnyFunSuite {
         }
       } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
+    // plan text renders every matrix by shape and content, not JVM identity
+    def hierText(): String = graft.functions.HierCentroidProbesExpr(
+      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("nv"),
+      gcents.map(_.clone), groupOf.clone, cents.map(_.clone), 1, 4).toString
+    assert(hierText() === hierText())
     // contracts fail loudly
     intercept[IllegalArgumentException] {
       Similarity.hierProbeStructs(col("nv"), gcents, cents, 4, 4) // gprobe > ngroups
